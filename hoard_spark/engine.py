@@ -4,13 +4,21 @@ This is the Spark-native replacement for the reference's five-call API
 (src/hoard.coffee:515-519):
 
     create / info       -> Catalog (driver-side metadata)
-    update / updateMany -> partitioned Parquet append + LWW-at-read
+    update / updateMany -> partitioned Parquet write + LWW-at-read
     fetch               -> tier routing + pruned scan + spine gap-fill
 
 plus the maintenance jobs a 100 TB deployment needs (compaction, retention
 drop) and the incremental rollup cascade (the reference's propagate).
 
-Storage layout (all append-only Parquet):
+Writes take one of two routes. A large batch is a Spark append of its
+aligned rows plus a Spark rollup recompute. A small ``update_many`` flush
+(its fold and cascade reading at most ``fetch_driver_max_files`` files)
+is written on the driver with no Spark job: each touched points partition
+is rewritten as one LWW-folded file and each touched rollup partition is
+recomputed and swapped — the write-side twin of the driver-side fetch.
+
+Storage layout (Parquet; points partitions grow by appends and shrink
+back to one file when folded by a driver flush or compact()):
 
     <warehouse>/points/tier=K/metric=M/date=D/   raw aligned points
         (bucket_ts long, value double, seq long, ts long)
@@ -32,10 +40,12 @@ in production.
 from __future__ import annotations
 
 import fcntl
+import io
 import json
 import os
 import re
 import time
+import uuid
 import zlib
 from contextlib import contextmanager
 from datetime import datetime, timedelta, timezone
@@ -45,11 +55,23 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from hoard_spark.catalog import Catalog, HoardError, MetricInfo
-from hoard_spark.fetch import TimeInfo, collect_values, fetch_df, plan_fetch
-from hoard_spark.fsutil import WarehouseFS, strip_local_uri
+from hoard_spark.fetch import (
+    TimeInfo,
+    collect_values,
+    fetch_df,
+    plan_fetch,
+    read_lww,
+    read_values,
+)
+from hoard_spark.fsutil import WarehouseFS, is_data_file, strip_local_uri
 from hoard_spark.functions import align_ts, bucket_date_col, spine
-from hoard_spark.ingest import Ingestor, lww, prepare_batch, validate_single
-from hoard_spark.rollup import merge_direct, plan_cascade, rollup_tier
+from hoard_spark.ingest import Ingestor, lww, route_points, validate_single
+from hoard_spark.rollup import (
+    merge_direct,
+    plan_cascade,
+    rollup_buckets,
+    rollup_tier,
+)
 
 _POINTS_READ_SCHEMA = T.StructType(
     [
@@ -80,9 +102,21 @@ _ROLLUP_READ_SCHEMA = T.StructType(
 _SAFE_PART_RE = re.compile(r"[A-Za-z0-9._-]+\Z")
 
 
+DAY = 86400
+
+
 def _day_start(date_str: str) -> int:
     dt = datetime.strptime(date_str, "%Y-%m-%d").replace(tzinfo=timezone.utc)
     return int(dt.timestamp())
+
+
+def _day_name(day: int) -> str:
+    """``date=`` partition value of a UTC day number (epoch seconds // DAY)."""
+    return datetime.fromtimestamp(day * DAY, tz=timezone.utc).date().isoformat()
+
+
+class _OverBudget(Exception):
+    """A driver-side flush needs more files than its budget allows."""
 
 
 class HoardEngine:
@@ -104,6 +138,12 @@ class HoardEngine:
         warehouse (the stored value wins on reopen) because it is a
         physical property of the written data.
 
+        ``fetch_driver_max_files``: the one file budget of both driver
+        routes, which run with no Spark job — a ``fetch()`` whose pruned
+        partition list is at most this many parquet files, and an
+        ``update_many()`` flush whose fold and rollup cascade read or
+        replace at most this many. 0 forces the Spark path for both.
+
         ``propagate_touched_cap``: the rollup cascade scopes its recompute
         to the exact (metric, date) pairs a batch touched, which needs one
         driver-side ``distinct().collect()``. For streaming micro-batches
@@ -116,8 +156,6 @@ class HoardEngine:
         """
         self.spark = spark
         self.warehouse_dir = warehouse_dir
-        # fetch() windows whose pruned partition list is at most this many
-        # parquet files are read driver-side (no Spark job); 0 disables
         self.fetch_driver_max_files = fetch_driver_max_files
         self.propagate_touched_cap = propagate_touched_cap
         self.fs = WarehouseFS(spark)  # data plane: works on file://, HDFS, S3
@@ -130,10 +168,6 @@ class HoardEngine:
         self.points_path = os.path.join(warehouse_dir, "points")
         self.rollups_path = os.path.join(warehouse_dir, "rollups")
         self._seq_path = os.path.join(ctl_dir, "_hoard_seq.json")
-        self._seq: dict[str, int] = {}
-        if os.path.exists(self._seq_path):
-            with open(self._seq_path) as f:
-                self._seq = json.load(f)
         self._layout_path = os.path.join(ctl_dir, "_hoard_layout.json")
         if os.path.exists(self._layout_path):
             with open(self._layout_path) as f:
@@ -272,14 +306,40 @@ class HoardEngine:
         return self.catalog.info(metric)
 
     # -------------------------------------------------------------- ingest
-    def _next_seq(self, metric: str, n: int) -> int:
-        start = self._seq.get(metric, 0)
-        self._seq[metric] = start + n
-        tmp = self._seq_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(self._seq, f)
-        os.replace(tmp, self._seq_path)
-        return start
+    def _reserve_seq(self, n: int) -> int:
+        """Reserve ``n`` consecutive values of the warehouse-wide write
+        sequence and return the first.
+
+        One allocator orders every writer: ``update_many`` reserves one
+        value per point and a micro-batch without a source ``seq`` one
+        2^40 block (streaming/ingest.py), so a later write always carries
+        the larger ``seq`` and wins LWW, whichever path wrote the bucket
+        before. The state is re-read under the writer lock each time, so
+        engine handles sharing a warehouse stay ordered. A seq file of
+        per-metric counters (the earlier format), or none, starts the
+        allocator above its counters and above the largest ``seq`` on
+        disk (one Spark job, once per warehouse).
+        """
+        with self._writer_lock():
+            state: dict = {}
+            if os.path.exists(self._seq_path):
+                with open(self._seq_path) as f:
+                    state = json.load(f)
+            if state.get("scope") == "warehouse":
+                start = int(state["next"])
+            else:
+                start = max([0, *map(int, state.values())])
+                if self.fs.isdir(self.points_path):
+                    top = self._read_points().agg(F.max("seq")).first()[0]
+                    if top is not None:
+                        start = max(start, top + 1)
+            if start + n >= 1 << 63:
+                raise HoardError("warehouse write sequence exhausted")
+            tmp = self._seq_path + ".tmp"
+            with open(tmp, "w") as f:
+                json.dump({"scope": "warehouse", "next": start + n}, f)
+            os.replace(tmp, self._seq_path)
+            return start
 
     def update(
         self, metric: str, value: float, ts: int, now: int | None = None
@@ -301,7 +361,7 @@ class HoardEngine:
         points: list[tuple[int, float]],
         now: int | None = None,
         propagate: bool = True,
-    ) -> DataFrame:
+    ) -> None:
         """Batch write (O4/O5, src/hoard.coffee:241-390).
 
         Within one call, points are applied in chronological order (the
@@ -309,20 +369,193 @@ class HoardEngine:
         committing, :242, :284), so the newest timestamp wins a bucket;
         across calls, the later call wins (slot overwrite). Both collapse to
         LWW on a ``seq`` assigned here in (ts, input-position) order.
+
+        A small flush is written on the driver with no Spark job
+        (``_flush_on_driver``); any other takes ``ingest_df``.
         """
         now = int(now if now is not None else time.time())
         info = self.catalog.info(metric)
         if not points:
-            return None
-        ordered = sorted(
-            range(len(points)), key=lambda i: (points[i][0], i)
-        )  # stable chronological order
-        base = self._next_seq(metric, len(points))
-        df = self.ingestor.points_batch(
-            metric, [points[i] for i in ordered], seq_start=base
+            return
+        ordered = [
+            (int(points[i][0]), float(points[i][1]))
+            for i in sorted(range(len(points)), key=lambda i: (points[i][0], i))
+        ]  # stable chronological order
+        with self._writer_lock():
+            base = self._reserve_seq(len(ordered))
+            if self._flush_on_driver(metric, info, ordered, base, now, propagate):
+                return
+            df = self.ingestor.points_batch(metric, ordered, seq_start=base)
+            self.ingest_df(metric, df, now=now, propagate=propagate)
+
+    def _flush_on_driver(
+        self,
+        metric: str,
+        info: MetricInfo,
+        points: list[tuple[int, float]],
+        seq_start: int,
+        now: int,
+        propagate: bool,
+    ) -> bool:
+        """Write one ``update_many`` flush with no Spark job, or return
+        False, having written nothing, for the Spark path to take it.
+
+        Same result as ``ingest_df``: ``route_points`` mirrors
+        ``prepare_batch``; every points partition the flush touches is
+        rewritten as ONE file holding what ``compact(metric)`` would
+        leave there; each cascade tier k recomputes every touched
+        (metric, date D) pair as ``_propagate_many_impl`` scopes it —
+        the xff-gated mean of tier k-1 over [D, D + 1 day + spp_k),
+        merged with tier k's direct points (the rollup side wins),
+        keeping the buckets dated D.
+
+        Runs only for the unbucketed layout, a metric name Spark writes
+        verbatim, dates within the fetch's date-span guard, rollup inputs
+        already materialized (an on-the-fly cascade is a Spark plan, as
+        in fetch), and at most ``fetch_driver_max_files`` files to read
+        or replace. Points are written before rollups: a crash can leave
+        rollups stale (``propagate_many`` rebuilds them), never ahead of
+        the points.
+        """
+        budget = self.fetch_driver_max_files
+        if budget <= 0 or self.metric_buckets or not _SAFE_PART_RE.match(metric):
+            return False
+        routed = route_points(info, points, now, seq_start)
+        cascade = plan_cascade(info) if propagate else []
+        batch: dict[tuple[int, int], list[tuple[int, float, int, int]]] = {}
+        for tier, b, value, seq, ts in routed:
+            batch.setdefault((tier, b // DAY), []).append((b, value, seq, ts))
+        touched: dict[int, list[int]] = {}  # cascade tier -> days
+        days = {day for _, day in batch}
+        for tier_k, _, lower_spp in cascade:
+            touched[tier_k] = sorted(
+                {(b - b % lower_spp) // DAY for t, b, *_ in routed if t <= tier_k}
+            )
+            for day in touched[tier_k]:
+                days.update((day, (day * DAY + DAY + lower_spp - 1) // DAY))
+        if days and not self._date_span_ok(max(days) - min(days) + 1):
+            return False
+        for tier_k, _, _ in cascade:
+            if (
+                touched[tier_k]
+                and tier_k > 1
+                and not touched[tier_k - 1]
+                and not self._is_materialized(tier_k - 1, metric)
+            ):
+                return False
+
+        listed: dict[tuple[str, int, int], list[str]] = {}
+
+        def files(root: str, tier: int, day: int) -> list[str]:
+            key = (root, tier, day)
+            if key not in listed:
+                listed[key] = self.fs.list_date_files(
+                    f"{root}/tier={tier}/metric={metric}", [_day_name(day)]
+                )
+                if sum(map(len, listed.values())) > budget:
+                    raise _OverBudget
+            return listed[key]
+
+        points_views: dict[tuple[int, int], dict[int, list]] = {}
+
+        def points_view(tier: int, day: int) -> dict[int, list]:
+            if (tier, day) not in points_views:
+                points_views[(tier, day)] = read_lww(
+                    files(self.points_path, tier, day), self._open_file,
+                    metric, fold_ts=True, rows=batch.get((tier, day), ()),
+                )
+            return points_views[(tier, day)]
+
+        rollups: dict[tuple[int, int], dict[int, tuple[float, int]]] = {}
+
+        def tier_values(tier: int, day: int) -> dict[int, float]:
+            if tier == 0:
+                return {b: r[1] for b, r in points_view(0, day).items()}
+            if (tier, day) in rollups:
+                return {b: v for b, (v, _) in rollups[(tier, day)].items()}
+            old = read_lww(files(self.rollups_path, tier, day), self._open_file, metric)
+            return {b: r[1] for b, r in old.items()}
+
+        try:
+            for tier, day in batch:
+                points_view(tier, day)
+            for tier_k, higher_spp, lower_spp in cascade:
+                for day in touched[tier_k]:
+                    lo, hi = day * DAY, day * DAY + DAY + lower_spp
+                    children = [
+                        (b, v)
+                        for d in range(day, (hi - 1) // DAY + 1)
+                        for b, v in tier_values(tier_k - 1, d).items()
+                        if lo <= b < hi
+                    ]
+                    out = {b: (r[1], 0) for b, r in points_view(tier_k, day).items()}
+                    out.update(rollup_buckets(
+                        children, lower_spp, higher_spp, info.x_files_factor
+                    ))
+                    out = {b: vk for b, vk in out.items() if b // DAY == day}
+                    # an empty recompute leaves the partition as it is, as
+                    # a dynamic overwrite writing no rows would
+                    if out:
+                        rollups[(tier_k, day)] = out
+                        files(self.rollups_path, tier_k, day)
+        except _OverBudget:
+            return False
+
+        self.catalog.touch(metric, now)
+        for tier, day in batch:
+            fold = points_views[(tier, day)]
+            bs = sorted(fold)
+            self._swap_partition(
+                self.points_path, tier, metric, day,
+                {"bucket_ts": bs, "value": [fold[b][1] for b in bs],
+                 "seq": [fold[b][0] for b in bs], "ts": [fold[b][2] for b in bs]},
+                listed[(self.points_path, tier, day)], publish_first=True,
+            )
+        for tier_k, _, _ in cascade:
+            for day in touched[tier_k]:
+                out = rollups.get((tier_k, day))
+                if out:
+                    bs = sorted(out)
+                    self._swap_partition(
+                        self.rollups_path, tier_k, metric, day,
+                        {"bucket_ts": bs, "value": [out[b][0] for b in bs],
+                         "known": [out[b][1] for b in bs]},
+                        listed[(self.rollups_path, tier_k, day)],
+                        publish_first=False,
+                    )
+            if touched[tier_k]:
+                self._mark_materialized(tier_k, [metric])
+        return True
+
+    def _swap_partition(
+        self,
+        root: str,
+        tier: int,
+        metric: str,
+        day: int,
+        cols: dict[str, list],
+        old: list[str],
+        publish_first: bool,
+    ) -> None:
+        """Replace one (tier, metric, date) partition's files ``old`` with
+        one snappy parquet file of ``cols`` (``value`` double, the rest
+        int64 — the types Spark writes and every reader expects)."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        table = pa.table({
+            c: pa.array(v, pa.float64() if c == "value" else pa.int64())
+            for c, v in cols.items()
+        })
+        sink = pa.BufferOutputStream()
+        pq.write_table(table, sink, compression="snappy")
+        self.fs.swap_file(
+            sink.getvalue().to_pybytes(),
+            f"{root}/tier={tier}/metric={metric}/date={_day_name(day)}/"
+            f"part-{uuid.uuid4().hex}.snappy.parquet",
+            old,
+            publish_first,
         )
-        prepared = self.ingest_df(metric, df, now=now, propagate=propagate)
-        return prepared
 
     def ingest_df(
         self,
@@ -857,6 +1090,15 @@ class HoardEngine:
         )
         return ti, collect_values(fetch_df(view, ti), ti)
 
+    def _date_span_ok(self, n_days: int) -> bool:
+        """The driver routes budget dir LISTINGS as well as files: each
+        date dir is one filesystem round trip (an RPC on S3/HDFS), so a
+        years-wide window over a sparse metric must not walk ~1100 dirs
+        just to discover it should fall back — even though its few files
+        might technically fit the file budget, Spark's listing is
+        parallel and the driver's is not."""
+        return n_days <= max(2 * self.fetch_driver_max_files, 8)
+
     def _fetch_fast_values(
         self, metric: str, tier: int, ti: TimeInfo
     ) -> list[float | None] | None:
@@ -883,13 +1125,7 @@ class HoardEngine:
         # same date span as _date_pred: date(from_interval)..date(to_interval)
         lo_d = datetime.fromtimestamp(ti.from_interval, tz=timezone.utc).date()
         hi_d = datetime.fromtimestamp(ti.to_interval, tz=timezone.utc).date()
-        # budget the dir LISTINGS as well as the files: each date dir is
-        # one filesystem round trip (an RPC on S3/HDFS), so a years-wide
-        # window over a sparse metric must not walk ~1100 dirs just to
-        # discover it should fall back — even though its few files might
-        # technically fit the file budget, Spark's listing is parallel
-        # and the driver's is not
-        if (hi_d - lo_d).days + 1 > max(2 * self.fetch_driver_max_files, 8):
+        if not self._date_span_ok((hi_d - lo_d).days + 1):
             return None
         dates = []
         d = lo_d
@@ -910,36 +1146,10 @@ class HoardEngine:
             # it is the ground truth either way.
             return None
 
-        import io
+        return read_values(files, self._open_file, metric, ti)
 
-        import pyarrow.parquet as pq
-
-        # tier 0: LWW merge (max seq wins per bucket); tier>0: rollup rows
-        # are unique per bucket already
-        best: dict[int, tuple[int, float | None]] = {}
-        for fpath in files:
-            pf = pq.ParquetFile(io.BytesIO(self.fs.read_bytes(fpath)))
-            phys = {c.name for c in pf.schema_arrow}
-            want = [c for c in ("metric", "bucket_ts", "value", "seq")
-                    if c in phys]
-            tbl = pf.read(columns=want)
-            bt = tbl["bucket_ts"].to_pylist()
-            vv = tbl["value"].to_pylist()
-            mm = tbl["metric"].to_pylist() if "metric" in phys else None
-            sq = tbl["seq"].to_pylist() if tier == 0 else None
-            for i, b in enumerate(bt):
-                if mm is not None and mm[i] != metric:
-                    continue
-                if not (ti.from_interval <= b < ti.to_interval):
-                    continue
-                s = sq[i] if sq is not None else 0
-                if b not in best or s > best[b][0]:
-                    best[b] = (s, vv[i])
-        n = max(0, (ti.to_interval - ti.from_interval) // ti.step)
-        values: list[float | None] = [None] * n
-        for b, (_, v) in best.items():
-            values[(b - ti.from_interval) // ti.step] = v
-        return values
+    def _open_file(self, path: str):
+        return io.BytesIO(self.fs.read_bytes(path))
 
     def fetch_dataframe(
         self, metric: str, from_ts: int, to_ts: int, now: int | None = None
@@ -1118,9 +1328,7 @@ class HoardEngine:
             if not d.startswith("date="):
                 continue
             out[d[len("date="):]] = sum(
-                1
-                for f in self.fs.listdir(f"{root}/{d}")
-                if f.endswith(".parquet")
+                map(is_data_file, self.fs.listdir(f"{root}/{d}"))
             )
         return out
 
@@ -1196,7 +1404,8 @@ class HoardEngine:
 
     def drop(self, metric: str) -> None:
         """Remove a metric end-to-end: point/rollup data, catalog entry,
-        seq state, materialized markers. Lifecycle admin the reference
+        materialized markers (the write sequence is warehouse-wide and
+        never rewinds). Lifecycle admin the reference
         delegates to the filesystem (delete the .hoard file); here it
         must also be partition-layout-aware.
 
@@ -1255,12 +1464,6 @@ class HoardEngine:
                 if self.fs.isdir(tmp):
                     self.fs.rmtree(tmp)
         self.catalog.drop(metric)
-        if metric in self._seq:
-            del self._seq[metric]
-            tmp = self._seq_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(self._seq, f)
-            os.replace(tmp, self._seq_path)
         stale = {
             k for k in self._materialized if k.split(":", 1)[1] == metric
         }

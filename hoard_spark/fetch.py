@@ -22,7 +22,9 @@ consumers.
 
 from __future__ import annotations
 
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass
+from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -96,4 +98,75 @@ def collect_values(result: DataFrame, ti: TimeInfo) -> list[float | None]:
         idx = (row["bucket_ts"] - ti.from_interval) // ti.step
         if 0 <= idx < n:
             values[idx] = row["value"]
+    return values
+
+
+def read_lww(
+    files: list[str],
+    open_file: Callable[[str], Any],
+    metric: str,
+    ts_range: tuple[int, int] | None = None,
+    fold_ts: bool = False,
+    rows: Sequence[tuple[int, float, int, int]] = (),
+) -> dict[int, list]:
+    """Driver-side read of one series from partition parquet files, LWW
+    collapsed: ``{bucket_ts: [seq, value]}`` (``[seq, value, ts]`` with
+    ``fold_ts``, ``ts`` the max over the bucket's rows, as compact()
+    folds it). ``open_file`` maps a path to what ``pyarrow`` reads;
+    ``rows`` (``(bucket_ts, value, seq, ts)``) are folded in after the
+    files, as if read from one more file.
+
+    The max ``seq`` wins a bucket. Rollup files carry no ``seq`` and
+    hold one row per bucket; there the first file read wins. A
+    ``metric`` data column (the bucketed layout) is filtered row-wise;
+    ``ts_range`` keeps buckets in ``[lo, hi)``."""
+    import pyarrow.parquet as pq
+
+    def columns():
+        for path in files:
+            pf = pq.ParquetFile(open_file(path))
+            phys = set(pf.schema_arrow.names)
+            want = [c for c in ("metric", "bucket_ts", "value", "seq", "ts")
+                    if c in phys and (c != "ts" or fold_ts)]
+            tbl = pf.read(columns=want)
+            yield (
+                tbl["bucket_ts"].to_pylist(),
+                tbl["value"].to_pylist(),
+                tbl["metric"].to_pylist() if "metric" in phys else None,
+                tbl["seq"].to_pylist() if "seq" in phys else None,
+                tbl["ts"].to_pylist() if fold_ts else None,
+            )
+        if rows:
+            bt, vv, sq, tt = map(list, zip(*rows))
+            yield bt, vv, None, sq, tt
+
+    best: dict[int, list] = {}
+    for bt, vv, mm, sq, tt in columns():
+        for i, b in enumerate(bt):
+            if mm is not None and mm[i] != metric:
+                continue
+            if ts_range is not None and not ts_range[0] <= b < ts_range[1]:
+                continue
+            s = sq[i] if sq is not None else 0
+            cur = best.get(b)
+            if cur is None:
+                best[b] = [s, vv[i], tt[i]] if fold_ts else [s, vv[i]]
+                continue
+            if s > cur[0]:
+                cur[0], cur[1] = s, vv[i]
+            if fold_ts and tt[i] > cur[2]:
+                cur[2] = tt[i]
+    return best
+
+
+def read_values(
+    files: list[str], open_file: Callable[[str], Any], metric: str, ti: TimeInfo
+) -> list[float | None]:
+    """The driver-side fetch: ``read_lww`` over the window's partition
+    files, laid out as the gap-filled values vector."""
+    best = read_lww(files, open_file, metric, (ti.from_interval, ti.to_interval))
+    n = max(0, (ti.to_interval - ti.from_interval) // ti.step)
+    values: list[float | None] = [None] * n
+    for b, row in best.items():
+        values[(b - ti.from_interval) // ti.step] = row[1]
     return values

@@ -40,6 +40,13 @@ def strip_local_uri(p: str) -> str | None:
     return p
 
 
+def is_data_file(name: str, ext: str = ".parquet") -> bool:
+    """True for a data file a Spark scan would read: Spark's file index
+    skips names starting with ``_`` or ``.`` (``_SUCCESS``, checksum
+    files, staged writes), so every driver-side listing must too."""
+    return name.endswith(ext) and not name.startswith(("_", "."))
+
+
 class WarehouseFS:
     """Thin wrapper over Hadoop FileSystem for one warehouse."""
 
@@ -131,7 +138,8 @@ class WarehouseFS:
     def list_date_files(
         self, base: str, dates: list[str], ext: str = ".parquet"
     ) -> list[str]:
-        """All ``base/date=D/*ext`` files for the given dates.
+        """All ``base/date=D/*ext`` data files for the given dates, hidden
+        names skipped as Spark skips them (``is_data_file``).
 
         On remote stores this is ONE listing round-trip — a
         ``globStatus`` with a date alternation — instead of one RPC per
@@ -150,12 +158,16 @@ class WarehouseFS:
                 out.extend(
                     f"{base}/date={d}/{n}"
                     for n in sorted(names)
-                    if n.endswith(ext)
+                    if is_data_file(n, ext)
                 )
             return out
         pat = base.rstrip("/") + "/date={" + ",".join(dates) + "}/*" + ext
         sts = self._fs(base).globStatus(self._path(pat))
-        return sorted(str(st.getPath()) for st in (sts or []))
+        return sorted(
+            str(st.getPath())
+            for st in (sts or [])
+            if is_data_file(st.getPath().getName(), ext)
+        )
 
     def read_bytes(self, p: str) -> bytes:
         """Whole-file read through the Hadoop stream API (works on
@@ -197,6 +209,59 @@ class WarehouseFS:
             stream.write(bytearray(data))
         finally:
             stream.close()
+
+    def swap_file(
+        self, data: bytes, dst: str, old: list[str], publish_first: bool
+    ) -> None:
+        """Replace the files ``old`` of one directory with ONE new file
+        ``dst`` holding ``data``.
+
+        The bytes are first staged under a hidden sibling name, which
+        Spark scans and ``list_date_files`` skip, so no reader sees a
+        partial file. ``publish_first`` renames the staged file into
+        place before deleting ``old``: a crash in between leaves both,
+        which suits a table whose readers collapse duplicates (LWW
+        points). Otherwise ``old`` goes first — the order of Spark's
+        dynamic partition overwrite, where a crash leaves the partition
+        missing (rebuildable), never doubled. Local paths take plain
+        Python I/O; anything else goes through Hadoop."""
+        parent, name = dst.rsplit("/", 1)
+        staged = f"{parent}/.{name}.staged"
+        lp, lstaged = self._local_path(dst), self._local_path(staged)
+        if lp is not None:
+            os.makedirs(os.path.dirname(lp), exist_ok=True)
+            with open(lstaged, "wb") as f:
+                f.write(data)
+        else:
+            self.write_bytes(staged, data)
+
+        def publish() -> None:
+            if lp is not None:
+                os.rename(lstaged, lp)
+            elif not self._fs(dst).rename(self._path(staged), self._path(dst)):
+                raise IOError(f"rename failed: {staged} -> {dst}")
+
+        if publish_first:
+            publish()
+        self.delete_files(old)
+        if not publish_first:
+            publish()
+
+    def delete_files(self, paths: list[str]) -> None:
+        """Delete files (a missing one is not an error). Locally the
+        Hadoop checksum sibling ``.<name>.crc`` goes too, as Hadoop's own
+        delete would take it."""
+        for p in paths:
+            lp = self._local_path(p)
+            if lp is None:
+                self._fs(p).delete(self._path(p), False)
+                continue
+            d, name = os.path.split(lp)
+            for victim in (lp, os.path.join(d, f".{name}.crc")):
+                try:
+                    os.remove(victim)
+                except FileNotFoundError:
+                    pass
 
     def rmtree(self, p: str) -> None:
         fs = self._fs(p)

@@ -44,8 +44,8 @@ import zlib
 from datetime import datetime, timedelta, timezone
 
 from hoard_spark.catalog import Catalog, HoardError
-from hoard_spark.fetch import TimeInfo, plan_fetch
-from hoard_spark.fsutil import strip_local_uri
+from hoard_spark.fetch import TimeInfo, plan_fetch, read_values
+from hoard_spark.fsutil import is_data_file, strip_local_uri
 
 _SAFE_PART_RE = re.compile(r"[A-Za-z0-9._-]+\Z")
 
@@ -84,8 +84,8 @@ def _list_date_files(fs, base: str, dates: list[str]) -> list[str]:
     for d in dates:
         sel = pafs.FileSelector(f"{base}/date={d}", allow_not_found=True)
         for info in fs.get_file_info(sel):
-            if info.type == pafs.FileType.File and info.path.endswith(
-                ".parquet"
+            if info.type == pafs.FileType.File and is_data_file(
+                info.base_name
             ):
                 files.append(info.path)
     return files
@@ -176,35 +176,7 @@ def python_fetch(
                 "through the Spark plan"
             )
 
-    import pyarrow.parquet as pq
-
-    # tier 0: LWW merge (max seq wins per bucket); tier>0: rollup rows
-    # are unique per bucket already
-    best: dict[int, tuple[int, float | None]] = {}
-    for fpath in files:
-        pf = pq.ParquetFile(fs.open_input_file(fpath))
-        phys = {c.name for c in pf.schema_arrow}
-        want = [
-            c for c in ("metric", "bucket_ts", "value", "seq") if c in phys
-        ]
-        tbl = pf.read(columns=want)
-        bt = tbl["bucket_ts"].to_pylist()
-        vv = tbl["value"].to_pylist()
-        mm = tbl["metric"].to_pylist() if "metric" in phys else None
-        sq = tbl["seq"].to_pylist() if tier == 0 else None
-        for i, b in enumerate(bt):
-            if mm is not None and mm[i] != metric:
-                continue
-            if not (ti.from_interval <= b < ti.to_interval):
-                continue
-            s = sq[i] if sq is not None else 0
-            if b not in best or s > best[b][0]:
-                best[b] = (s, vv[i])
-    n = max(0, (ti.to_interval - ti.from_interval) // ti.step)
-    values: list[float | None] = [None] * n
-    for b, (_, v) in best.items():
-        values[(b - ti.from_interval) // ti.step] = v
-    return ti, values
+    return ti, read_values(files, fs.open_input_file, metric, ti)
 
 
 def make_hoard_fetch(warehouse_dir: str):

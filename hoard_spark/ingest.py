@@ -14,11 +14,14 @@ Reference semantics reproduced (citations into /root/reference):
   analog — the *contract* is last-write-wins per bucket, which we implement
   with an explicit monotone ingest sequence ``seq`` as the tie-break.
 
-Spark design: ingest is a pure append of aligned rows into a Parquet table
+Spark design: a batch is an append of aligned rows into a Parquet table
 partitioned by ``(tier, metric, date)``; there is no in-place overwrite at
 100 TB. LWW is enforced at read (window/max_by over ``seq``) and folded in
 physically by the compaction job (engine.compact). Appends are cheap and
-contention-free; dedup cost rides on buckets actually read.
+contention-free; dedup cost rides on buckets actually read. A flush small
+enough for the driver (``route_points``, HoardEngine._flush_on_driver)
+instead rewrites each partition it touches as one folded file, with the
+same routing and the same LWW result.
 """
 
 from __future__ import annotations
@@ -27,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hoard_spark.catalog import Catalog, HoardError, MetricInfo
-from hoard_spark.functions import align_col, bucket_date_col
+from hoard_spark.functions import align_col, align_ts, bucket_date_col
 
 POINTS_SCHEMA = "metric string, ts long, value double, seq long"
 
@@ -94,6 +97,30 @@ def prepare_batch(
     df = df.withColumn("bucket_ts", bucket.cast("long"))
     df = df.withColumn("date", bucket_date_col(F.col("bucket_ts")))
     return df.select("metric", "tier", "bucket_ts", "date", "value", "seq", "ts")
+
+
+def route_points(
+    info: MetricInfo,
+    points: list[tuple[int, float]],
+    now: int,
+    seq_start: int,
+) -> list[tuple[int, int, float, int, int]]:
+    """``prepare_batch`` (non-strict) for a batch small enough to route on
+    the driver: ``(tier, bucket_ts, value, seq, ts)`` per valid point,
+    ``seq = seq_start + list position`` as ``points_batch`` assigns it.
+    Future and too-old points are dropped silently; each survivor goes
+    to the finest archive covering its age, aligned to that archive's
+    bucket width (src/hoard.coffee:192-203, 254-277)."""
+    rows = []
+    for i, (ts, value) in enumerate(points):
+        age = now - ts
+        if not 0 <= age < info.max_retention:
+            continue
+        a = info.archive_for_age(age)
+        rows.append(
+            (a.tier, align_ts(ts, a.seconds_per_point), value, seq_start + i, ts)
+        )
+    return rows
 
 
 def policy_dim(spark: SparkSession, by_sig) -> DataFrame:
@@ -221,17 +248,6 @@ class Ingestor:
                 ).cast("int"),
             )
         return df
-
-    def append(self, df: DataFrame, info: MetricInfo, now: int) -> DataFrame:
-        """Validate + route + append one metric's batch.
-
-        Returns the prepared batch (for incremental rollup scoping). The
-        write is a plain partitioned append: no read-modify-write — the
-        scalable half of the LWW design.
-        """
-        prepared = self.prepare(df, info, now)
-        self.write(prepared)
-        return prepared
 
     def write(self, prepared: DataFrame) -> None:
         """Append a ``prepare``d batch to the points table."""

@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hoard_spark.catalog import MetricInfo
-from hoard_spark.functions import align_col, bucket_date_col
+from hoard_spark.functions import align_col
 
 # Classic Whisper consolidation functions. The reference hard-codes mean
 # ("TODO: Another CF besides average?", src/hoard.coffee:156); the engine
@@ -101,21 +101,26 @@ def merge_direct(rollup: DataFrame, direct: DataFrame | None) -> DataFrame:
     )
 
 
-def touched_lower_buckets(batch: DataFrame, lower_spp: int) -> DataFrame:
-    """Distinct lower-tier buckets a prepared batch lands in.
-
-    The incremental-scoping analog of the reference's per-unique-lower-
-    interval propagate calls (``_.uniq``, src/hoard.coffee:373-378). One
-    small distinct over the micro-batch.
-    """
-    return (
-        batch.select(
-            "metric",
-            align_col(F.col("bucket_ts"), lower_spp).alias("bucket_ts"),
-        )
-        .distinct()
-        .withColumn("date", bucket_date_col(F.col("bucket_ts")))
-    )
+def rollup_buckets(
+    children: list[tuple[int, float]],
+    lower_spp: int,
+    higher_spp: int,
+    x_files_factor: float,
+) -> dict[int, tuple[float, int]]:
+    """``rollup_tier`` (average CF) on the driver, for one series' LWW-
+    normalized ``(bucket_ts, value)`` rows: ``{lower bucket: (mean,
+    known)}`` for the buckets passing the same xff gate."""
+    if lower_spp % higher_spp != 0:
+        raise ValueError(f"{lower_spp=} is not a multiple of {higher_spp=}")
+    expected = float(lower_spp // higher_spp)
+    groups: dict[int, list[float]] = {}
+    for b, v in children:
+        groups.setdefault(b - b % lower_spp, []).append(v)
+    return {
+        b: (sum(vs) / len(vs), len(vs))
+        for b, vs in groups.items()
+        if len(vs) / expected >= float(x_files_factor)
+    }
 
 
 def plan_cascade(info: MetricInfo) -> list[tuple[int, int, int]]:

@@ -15,10 +15,11 @@ streaming aggregation. So the stream never holds aggregation state at all:
         2. incremental rollup of the touched buckets only    (propagate)
 
 Each micro-batch is a bounded batch job; LWW remains an at-read/compaction
-concern anchored on ``seq``. Checkpointing gives exactly-once per batch
-(appends are idempotent per epoch via Spark's file-sink-style semantics; for
-true end-to-end idempotence under retries, carry a source ``seq`` so replays
-collapse in the LWW dedup).
+concern anchored on ``seq``. A batch without a source ``seq`` draws a fresh
+block of the warehouse-wide write sequence, so a replayed batch rewrites
+the same values under newer ``seq``s (same answer, extra rows until
+compaction); for true end-to-end idempotence under retries, carry a source
+``seq`` so replays collapse in the LWW dedup.
 
 Multi-metric batches are grouped by retention-policy signature so each
 distinct policy costs one cascade write per batch, not one per metric —
@@ -67,6 +68,8 @@ def ingest_microbatch(
     propagate: bool = True,
 ) -> None:
     """Process one micro-batch: columns (metric, ts, value[, seq]).
+    ``batch_id`` is foreachBatch's epoch id; the write order comes from
+    the engine's write sequence, not from it.
 
     Unknown metrics (no catalog policy) are skipped — the reference errors
     on a missing file; a stream must not die on one bad key, so they are
@@ -78,13 +81,15 @@ def ingest_microbatch(
         return
     if "seq" not in batch_df.columns:
         # No source sequence: order within the batch is arbitrary, so
-        # synthesize one that makes batches apply in arrival order.
-        # Explicit bit budget (64-bit long): batch_id gets bits 40+,
-        # partition id bits 28-39 (<=4096 partitions, asserted below),
+        # synthesize one that makes writes apply in arrival order. The
+        # batch reserves one 2^40 block of the engine's warehouse-wide
+        # write sequence (the one update_many draws from, so either
+        # writer's later write wins LWW) and packs inside it: partition
+        # id bits 28-39 (<=4096 partitions, asserted below),
         # per-partition record index bits 0-27 (<=268M rows/partition in
         # one micro-batch). monotonically_increasing_id alone can't sit
-        # under batch_id's bits: it packs partitionId at bit 33, so any
-        # partition id >=128 would overflow into the next batch's range.
+        # in the block: it packs partitionId at bit 33, so any partition
+        # id >=128 would overflow into the next block.
         npart = batch_df.rdd.getNumPartitions()
         if npart > 1 << 12:
             raise ValueError(
@@ -111,7 +116,7 @@ def ingest_microbatch(
         )
         batch_df = batch_df.withColumn(
             "seq",
-            (F.lit(int(batch_id)).cast("long") * F.lit(1 << 40))
+            F.lit(engine._reserve_seq(1 << 40)).cast("long")
             + (F.spark_partition_id().cast("long") * F.lit(1 << 28))
             + per_part_idx
             + idx_guard,

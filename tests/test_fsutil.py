@@ -158,6 +158,43 @@ def test_list_date_files_local_and_glob_paths_agree(spark, tmp_path):
     assert len(fs.list_date_files(str(base), ["2026-01-03"])) == 1
 
 
+def test_list_date_files_skips_hidden_files(spark, tmp_path):
+    """Spark's file index skips names starting with ``_`` or ``.``; the
+    driver-side listing must too, on both the local and glob paths."""
+    d = tmp_path / "pts" / "tier=0" / "metric=m" / "date=2026-01-01"
+    d.mkdir(parents=True)
+    for n in ("a.parquet", "_b.parquet", ".c.parquet", ".a.parquet.crc"):
+        (d / n).write_bytes(b"x")
+    fs = WarehouseFS(spark)
+    base = str(tmp_path / "pts" / "tier=0" / "metric=m")
+    for local in (True, False):
+        fs._default_local = local
+        names = [p.rsplit("/", 1)[-1] for p in fs.list_date_files(base, ["2026-01-01"])]
+        assert names == ["a.parquet"], (local, names)
+
+
+def test_swap_file_replaces_old_files(spark, tmp_path):
+    """swap_file leaves exactly the new file (no staged or checksum
+    leftovers) in either publish order, locally and through Hadoop."""
+    fs = WarehouseFS(spark)
+    for i, (form, publish_first) in enumerate(
+        [(str, True), (str, False), (_uri, True), (_uri, False)]
+    ):
+        d = tmp_path / f"d{i}"
+        d.mkdir()
+        for n in ("old1.parquet", "old2.parquet", ".old1.parquet.crc"):
+            (d / n).write_bytes(b"old")
+        fs.swap_file(
+            b"new",
+            form(d / "new.parquet"),
+            [form(d / "old1.parquet"), form(d / "old2.parquet")],
+            publish_first,
+        )
+        left = sorted(p.name for p in d.iterdir() if not p.name.endswith(".crc"))
+        assert left == ["new.parquet"], (i, sorted(p.name for p in d.iterdir()))
+        assert (d / "new.parquet").read_bytes() == b"new"
+
+
 def test_uri_warehouse_shares_control_plane(spark, tmp_path):
     """A warehouse opened as file:/wh, file:///wh and /wh is ONE
     warehouse: the driver-local control plane (catalog/seq/layout JSON)

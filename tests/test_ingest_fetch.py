@@ -182,6 +182,8 @@ def test_sql_surface_over_warehouse(engine):
         "cpu", [(now - 3600 * i, float(i)) for i in range(30)], now=now
     )
     # duplicate write into one bucket: raw keeps both, series keeps winner
+    # (through the Spark path, which appends; a driver flush folds)
+    engine.fetch_driver_max_files = 0
     engine.update_many("cpu", [(now - 3600 + 5, 999.0)], now=now)
 
     raw = engine.sql(

@@ -226,3 +226,17 @@ def test_sql_fetch_through_file_uri_pyarrow_fs(spark, engine):
     shutil.rmtree(os.path.join(engine.warehouse_dir, "points"))
     with pytest.raises(HoardError, match="not resolving"):
         python_fetch(uri, "lots", 1311277105, 1311295105, now)
+
+
+def test_list_date_files_skips_hidden_files(tmp_path):
+    """The UDTF's pyarrow listing skips ``_x``/``.x`` names as Spark's
+    file index does (a staged or leftover file is not data)."""
+    from hoard_spark.functions.sql_fetch import _list_date_files, _resolve_fs
+
+    d = tmp_path / "tier=0" / "metric=m" / "date=2026-01-01"
+    d.mkdir(parents=True)
+    for n in ("a.parquet", "_b.parquet", ".c.parquet"):
+        (d / n).write_bytes(b"x")
+    fs, root = _resolve_fs(str(tmp_path))
+    files = _list_date_files(fs, f"{root}/tier=0/metric=m", ["2026-01-01"])
+    assert [f.rsplit("/", 1)[-1] for f in files] == ["a.parquet"]
