@@ -10,8 +10,11 @@ This is the Spark-native replacement for the reference's five-call API
 plus the maintenance jobs a 100 TB deployment needs (compaction, retention
 drop) and the incremental rollup cascade (the reference's propagate).
 
-Writes take one of two routes. A large batch is a Spark append of its
-aligned rows plus a Spark rollup recompute. A small ``update_many`` flush
+Writes take one of two routes. The Spark route is one write core
+(``_ingest_prepared``) for every batch: a stream micro-batch, an
+``ingest_df`` (its one-metric case) and an ``update_many`` flush too big
+for the driver all append their aligned rows beside a rollup recompute
+scoped to the partitions the batch touched. A small ``update_many`` flush
 (its fold and cascade reading at most ``fetch_driver_max_files`` files)
 is written on the driver with no Spark job: each touched points partition
 is rewritten as one LWW-folded file and each touched rollup partition is
@@ -50,6 +53,7 @@ import zlib
 from contextlib import contextmanager
 from datetime import datetime, timedelta, timezone
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -501,7 +505,9 @@ class HoardEngine:
         except _OverBudget:
             return False
 
-        self.catalog.touch(metric, now)
+        # lastUpdate moves only when a point lands, as on the Spark path
+        if batch:
+            self.catalog.touch(metric, now)
         for tier, day in batch:
             fold = points_views[(tier, day)]
             bs = sorted(fold)
@@ -563,25 +569,159 @@ class HoardEngine:
         df: DataFrame,
         now: int | None = None,
         propagate: bool = True,
-    ) -> DataFrame:
+    ) -> None:
         """DataFrame ingest for one metric: columns (metric, ts, value, seq).
 
-        The scalable entry point: validity filter + tier routing + aligned
-        append, then incremental rollup scoped to the touched buckets.
+        The one-metric case of the micro-batch write (``_ingest_prepared``):
+        validity filter + tier routing + aligned append, with the rollup
+        cascade scoped to the touched buckets. Only rows whose ``metric``
+        is ``metric`` are written; any other row is dropped, as the stream
+        drops a metric the catalog does not know.
         """
         now = int(now if now is not None else time.time())
-        info = self.catalog.info(metric)
-        # Same shape as the streaming micro-batch path (round 8): prepare
-        # once, cache, run the rollup pass from memory (``pending``) so it
-        # reads only pre-existing history from disk, then append.
-        with self._writer_lock():
-            prepared = self.ingestor.prepare(df, info, now).cache()
-            self.catalog.touch(metric, now)
-            if propagate and len(info.archives) > 1:
-                self.propagate(metric, batch=prepared, pending=prepared)
-            self.ingestor.write(prepared)
+        by_sig = [(self.catalog.info(metric), [metric])]
+        self._ingest_prepared(
+            self.ingestor.prepare(df, by_sig, now), by_sig, now, propagate
+        )
+
+    def _ingest_prepared(
+        self,
+        prepared: DataFrame,
+        by_sig: list[tuple[MetricInfo, list[str]]],
+        now: int,
+        propagate: bool,
+    ) -> None:
+        """The Spark write path: append a prepared batch and recompute the
+        rollup partitions it dirties.
+
+        ``prepared`` is ``prepare_batch_multi`` output over
+        ``policy_dim(by_sig)`` (plus ``mb`` when bucketed): ``_sig``
+        indexes ``by_sig``, one ``(MetricInfo, [metric, ...])`` entry per
+        retention-policy signature. ONE job fills the cache and collects,
+        for every policy group at once, the metrics present and the rollup
+        partitions touched (``_collect_touched``). Then, under the writer
+        lock, ONE catalog write (``touch_many``) and the points append
+        running CONCURRENTLY with one multi-metric cascade per policy
+        group: both are pure readers of the cache, and the LWW collapse
+        makes any interleaving of their disk visibility idempotent. Total:
+        2 + O(tiers) jobs per batch, independent of metric AND policy
+        count, with the append hidden under the cascade's wall-clock.
+        """
+        prepared = prepared.cache()
+        try:
+            present, touched = self._collect_touched(prepared, by_sig)
+            if not present:
+                return
+            with self._writer_lock():
+                self.catalog.touch_many(
+                    sorted(set().union(*present.values())), now
+                )
+                err: list[BaseException] = []
+
+                def _append_points() -> None:
+                    try:
+                        self.ingestor.write(
+                            prepared.select(
+                                "metric", "tier", "bucket_ts", "date",
+                                "value", "seq", "ts",
+                                *(["mb"] if self.metric_buckets else []),
+                            )
+                        )
+                    except BaseException as e:  # surfaced after join below
+                        err.append(e)
+
+                # InheritableThread carries the caller's job group and
+                # scheduler pool over to the append's jobs.
+                writer = InheritableThread(target=_append_points)
+                writer.start()
+                try:
+                    for sid, (info, _) in enumerate(by_sig):
+                        mets = sorted(present.get(sid, ()))
+                        if not propagate or not mets or len(info.archives) <= 1:
+                            continue
+                        # The cascade's tier views take the batch from
+                        # memory (``pending``); a racing append's rows that
+                        # a scan sees on disk collapse in LWW. touched is
+                        # None when the batch blew the touched-pair cap:
+                        # ``batch`` then scopes each tier by date range.
+                        rows = prepared.where(F.col("_sig") == sid)
+                        if touched is None:
+                            self.propagate_many(mets, batch=rows, pending=rows)
+                        else:
+                            self.propagate_many(
+                                mets, pending=rows, touched_by_tier=touched[sid]
+                            )
+                finally:
+                    writer.join()
+                if err:
+                    raise err[0]
+        finally:
             prepared.unpersist()
-        return prepared
+
+    def _collect_touched(
+        self,
+        prepared: DataFrame,
+        by_sig: list[tuple[MetricInfo, list[str]]],
+    ) -> tuple[dict[int, set], dict[int, dict[int, set]] | None]:
+        """One distinct job over the prepared cache: per policy group, the
+        metrics present and the (metric, coarse-bucket date) pairs per
+        cascade tier (the generalized ``_.uniq`` propagate-target dedup,
+        src/hoard.coffee:373-378). Single-archive groups contribute a
+        presence-only arm (``tk = 0``) so ``touch_many`` still sees them.
+
+        Steady-state batches touch (metrics x days-per-batch) pairs — tiny
+        — but a backfill replaying years of history would pull a huge list
+        through the driver. Above ``propagate_touched_cap`` pairs this
+        returns ``touched = None`` with only the present-metric set
+        (bounded by the metric universe); the cascade then scopes each tier
+        by the batch's date range instead."""
+        frames = []
+        for sid, (info, _) in enumerate(by_sig):
+            base = prepared.where(F.col("_sig") == sid)
+            cascade = plan_cascade(info)
+            if not cascade:
+                frames.append(
+                    base.select(
+                        F.lit(sid).alias("sid"),
+                        F.lit(0).alias("tk"),
+                        "metric",
+                        F.to_date(F.lit("1970-01-01")).alias("d"),
+                    )
+                )
+                continue
+            for tier_k, _, lower_spp in cascade:
+                frames.append(
+                    base.where(F.col("tier") <= tier_k).select(
+                        F.lit(sid).alias("sid"),
+                        F.lit(tier_k).alias("tk"),
+                        "metric",
+                        bucket_date_col(
+                            F.col("bucket_ts")
+                            - F.pmod(F.col("bucket_ts"), F.lit(lower_spp))
+                        ).alias("d"),
+                    )
+                )
+        un = frames[0]
+        for f in frames[1:]:
+            un = un.unionByName(f)
+        cap = self.propagate_touched_cap
+        rows = (
+            un.distinct().limit(cap + 1).collect()
+            if cap > 0
+            else un.distinct().collect()
+        )
+        present: dict[int, set] = {}
+        if cap > 0 and len(rows) > cap:
+            for r in prepared.select("_sig", "metric").distinct().collect():
+                present.setdefault(r["_sig"], set()).add(r["metric"])
+            return present, None
+        touched: dict[int, dict[int, set]] = {}
+        for r in rows:
+            present.setdefault(r["sid"], set()).add(r["metric"])
+            touched.setdefault(r["sid"], {}).setdefault(r["tk"], set()).add(
+                (r["metric"], str(r["d"]))
+            )
+        return present, touched
 
     # ------------------------------------------------------------- reading
     def _read_schema(self, base: T.StructType) -> T.StructType:
@@ -768,7 +908,9 @@ class HoardEngine:
         batch: DataFrame | None = None,
         pending: DataFrame | None = None,
     ) -> None:
-        """Materialize the rollup cascade (O6, src/hoard.coffee:71-178)."""
+        """Materialize the rollup cascade (O6, src/hoard.coffee:71-178):
+        a full rebuild, or with ``batch`` a recompute over the batch's date
+        range (see ``_propagate_many_impl``)."""
         self.propagate_many([metric], batch=batch, pending=pending)
 
     def propagate_many(
@@ -777,13 +919,10 @@ class HoardEngine:
         batch: DataFrame | None = None,
         pending: DataFrame | None = None,
         touched_by_tier: dict[int, set[tuple[str, str]]] | None = None,
-        force_range: bool = False,
     ) -> None:
         """See ``_propagate_many_impl``; serialized by the writer lock."""
         with self._writer_lock():
-            self._propagate_many_impl(
-                metrics, batch, pending, touched_by_tier, force_range
-            )
+            self._propagate_many_impl(metrics, batch, pending, touched_by_tier)
 
     def _propagate_many_impl(
         self,
@@ -791,15 +930,21 @@ class HoardEngine:
         batch: DataFrame | None = None,
         pending: DataFrame | None = None,
         touched_by_tier: dict[int, set[tuple[str, str]]] | None = None,
-        force_range: bool = False,
     ) -> None:
         """Materialize the rollup cascade for metrics SHARING one policy.
 
-        With ``batch`` (a prepared ingest batch covering the metrics) the
-        recompute is scoped to exactly the (metric, date) rollup partitions
-        the batch touched — the generalized ``_.uniq`` propagate-target
-        dedup (src/hoard.coffee:373-378) — and written with dynamic
-        partition overwrite. Without it, a full rebuild.
+        Three scopes, each written with dynamic partition overwrite:
+
+        - ``touched_by_tier`` (cascade tier -> {(metric, date)}): exactly
+          the rollup partitions a batch touched — the generalized
+          ``_.uniq`` propagate-target dedup (src/hoard.coffee:373-378).
+          The write core collects these sets (``_collect_touched``).
+        - ``batch`` (a prepared batch covering the metrics): every date
+          in the batch's per-tier min/max bucket span — a superset of the
+          touched scope, so value-equal by construction. The write core
+          passes it for a backfill whose touched list is over
+          ``propagate_touched_cap``.
+        - neither: a full rebuild.
 
         ``pending``: the same prepared batch when its rows are NOT yet
         (or not necessarily yet) appended to the points table — the tier
@@ -808,18 +953,11 @@ class HoardEngine:
         micro-batch from memory. Duplicates (rows both on disk and in
         pending) collapse in LWW, so passing it is always safe.
 
-        ``force_range``: the caller already knows the batch blows the
-        touched-pair cap (streaming ingest collects the touched sets in
-        its own fused job and sees the overflow first) — skip straight to
-        the per-tier min/max span path instead of re-running the capped
-        distinct-collect on exactly the huge batch the cap protects
-        against (ADVICE r9).
-
         Scale contract: the whole call runs O(tiers) Spark jobs regardless
-        of metric count — per tier, one distinct over the micro-batch, one
-        multi-metric groupBy recompute, one partitioned write. Never a
-        per-metric driver loop (that was the round-1 scale-killer: a
-        100k-metric micro-batch cost O(metrics x tiers) jobs).
+        of metric count — per tier, one multi-metric groupBy recompute and
+        one partitioned write. Never a per-metric driver loop (that was
+        the round-1 scale-killer: a 100k-metric micro-batch cost
+        O(metrics x tiers) jobs).
         """
         # the cascade/xff come from metrics[0]; a caller mixing policies
         # would get rollups computed with the wrong tier spans, silently
@@ -829,84 +967,37 @@ class HoardEngine:
         if not cascade:
             return
 
-        # ``touched_by_tier`` may arrive precomputed (streaming ingest
-        # collects it in the same job that discovers the batch's metrics
-        # and fills the pending cache — no second distinct pass here).
         range_by_tier: dict[int, tuple[int, int]] | None = None
         if touched_by_tier is None and batch is not None:
+            # per-tier min/max bucket spans (one #tiers-row agg job); each
+            # cascade tier is recomputed over that date range as a
+            # predicate instead of a touched list
             batch = batch.select("metric", "tier", "bucket_ts")
-            over_cap = force_range
-            rows: list = []
-            if not over_cap:
-                # (metric, date) pairs affected per cascade tier: rows
-                # routed to finer tiers cascade down; rows routed directly
-                # to a tier land as-is; coarser rows don't touch it. ONE
-                # fused distinct job computes the touched sets for ALL
-                # cascade steps (round 8 — was one distinct job per tier):
-                # the per-tier frames are unioned with a tier tag, so the
-                # whole scoping pass costs a single batch-sized shuffle
-                # regardless of cascade depth.
-                frames = []
-                for tier_k, _, lower_spp in cascade:
-                    frames.append(
-                        batch.where(F.col("tier") <= tier_k).select(
-                            F.lit(tier_k).alias("tk"),
-                            "metric",
-                            bucket_date_col(
-                                F.col("bucket_ts")
-                                - F.pmod(
-                                    F.col("bucket_ts"), F.lit(lower_spp)
-                                )
-                            ).alias("d"),
-                        )
-                    )
-                un = frames[0]
-                for f in frames[1:]:
-                    un = un.unionByName(f)
-                cap = self.propagate_touched_cap
-                rows = (
-                    un.distinct().limit(cap + 1).collect()
-                    if cap > 0
-                    else un.distinct().collect()
+            spans = {
+                r["tier"]: (r["lo"], r["hi"])
+                for r in batch.groupBy("tier")
+                .agg(
+                    F.min("bucket_ts").alias("lo"),
+                    F.max("bucket_ts").alias("hi"),
                 )
-                over_cap = cap > 0 and len(rows) > cap
-            if over_cap:
-                # Backfill-scale batch: the touched list would flood the
-                # driver. Fall back to per-tier min/max bucket spans (one
-                # #tiers-row agg job) and recompute each cascade tier over
-                # that date range as a predicate — a superset of the
-                # touched scope, so value-equal by construction.
-                spans = {
-                    r["tier"]: (r["lo"], r["hi"])
-                    for r in batch.groupBy("tier")
-                    .agg(
-                        F.min("bucket_ts").alias("lo"),
-                        F.max("bucket_ts").alias("hi"),
-                    )
-                    .collect()
-                }
-                range_by_tier = {}
-                for tier_k, _, _lspp in cascade:
-                    los = [lo for t, (lo, _) in spans.items() if t <= tier_k]
-                    his = [hi for t, (_, hi) in spans.items() if t <= tier_k]
-                    if los:
-                        range_by_tier[tier_k] = (min(los), max(his))
-                # only metrics the batch actually carries get the
-                # materialized flag (bounded by the metric universe — the
-                # caller's ``metrics`` list is already that size; it is
-                # the metrics x days product the cap avoids): a passed-
-                # but-absent metric was recomputed only within the range,
-                # so flagging its rollup complete would be wrong.
-                batch_metrics = sorted(
-                    r["metric"]
-                    for r in batch.select("metric").distinct().collect()
-                )
-            else:
-                touched_by_tier = {}
-                for r in rows:
-                    touched_by_tier.setdefault(r["tk"], set()).add(
-                        (r["metric"], str(r["d"]))
-                    )
+                .collect()
+            }
+            range_by_tier = {}
+            for tier_k, _, _lspp in cascade:
+                los = [lo for t, (lo, _) in spans.items() if t <= tier_k]
+                his = [hi for t, (_, hi) in spans.items() if t <= tier_k]
+                if los:
+                    range_by_tier[tier_k] = (min(los), max(his))
+            # only metrics the batch actually carries get the materialized
+            # flag (bounded by the metric universe — the caller's
+            # ``metrics`` list is already that size; it is the metrics x
+            # days product the cap avoids): a passed-but-absent metric was
+            # recomputed only within the range, so flagging its rollup
+            # complete would be wrong.
+            batch_metrics = sorted(
+                r["metric"]
+                for r in batch.select("metric").distinct().collect()
+            )
 
         for tier_k, higher_spp, lower_spp in cascade:
             touched_pairs: list[tuple[str, str]] | None = None
@@ -1220,7 +1311,7 @@ class HoardEngine:
         now = int(now if now is not None else time.time())
         info = self._require_shared_policy(metrics, "fetch_many")
         archive, ti = plan_fetch(info, int(from_ts), int(to_ts), now)
-        view = self._tier_view_many_at(
+        view = self._tier_view_many(
             metrics, archive.tier, (ti.from_interval, ti.to_interval)
         )
         sp = spine(self.spark, ti.from_interval, ti.to_interval, ti.step)
@@ -1258,14 +1349,6 @@ class HoardEngine:
                     f"{metrics[0]!r} and {m!r} differ"
                 )
         return first
-
-    def _tier_view_many_at(
-        self, metrics: list[str], tier: int, ts_range: tuple[int, int]
-    ) -> DataFrame:
-        """Like _tier_view_many but with uniform fetch semantics: verify the
-        metrics share one policy signature first."""
-        self._require_shared_policy(metrics, "fetch_many")
-        return self._tier_view_many(metrics, tier, ts_range)
 
     # ---------------------------------------------------------------- SQL
     def register_sql_views(self, prefix: str = "hoard") -> None:

@@ -35,22 +35,20 @@ from hoard_spark.functions import align_col, align_ts, bucket_date_col
 POINTS_SCHEMA = "metric string, ts long, value double, seq long"
 
 
-def prepare_batch(
-    df: DataFrame,
-    info: MetricInfo,
-    now: int,
-    strict_future: bool = False,
-) -> DataFrame:
+def prepare_batch(df: DataFrame, info: MetricInfo, now: int) -> DataFrame:
     """Validate, route and align one metric's raw points.
+
+    The single-policy reference form of ``prepare_batch_multi``, which
+    the Spark write path uses; tests pin that one row-for-row against
+    this.
 
     Input columns: ``metric, ts, value, seq`` (epoch seconds). Output adds
     ``tier`` (routed archive), ``bucket_ts`` (aligned) and ``date``
-    (partition column) and drops invalid points:
+    (partition column) and drops invalid points (updateMany's batch path
+    silently skips them):
 
-    - future points (``ts > now``) are dropped (update() rejects them with an
-      error, src/hoard.coffee:186-189; updateMany's batch path silently skips
-      invalid points — set ``strict_future=True`` for the erroring variant,
-      which the engine does for single-point update()).
+    - future points (``ts > now``) are dropped (update() rejects them with
+      an error on the driver, ``validate_single``, src/hoard.coffee:186-189).
     - points with ``age >= maxRetention`` are dropped (:274-275).
 
     Everything below is built-in column expressions — the routing CASE is a
@@ -58,21 +56,6 @@ def prepare_batch(
     batch stays inside whole-stage codegen; no Python UDF.
     """
     age = F.lit(int(now)) - F.col("ts")
-    if strict_future:
-        # Erroring variant (reference update(), src/hoard.coffee:186-189):
-        # fail the job on any future point instead of silently dropping.
-        df = df.withColumn(
-            "ts",
-            F.when(
-                F.col("ts") <= F.lit(int(now)), F.col("ts")
-            ).otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit("point in the future: ts="), F.col("ts").cast("string")
-                    )
-                )
-            ),
-        )
     df = df.where((age >= 0) & (age < F.lit(info.max_retention)))
 
     # Route each point to the highest-precision archive covering its age
@@ -105,7 +88,7 @@ def route_points(
     now: int,
     seq_start: int,
 ) -> list[tuple[int, int, float, int, int]]:
-    """``prepare_batch`` (non-strict) for a batch small enough to route on
+    """``prepare_batch`` for a batch small enough to route on
     the driver: ``(tier, bucket_ts, value, seq, ts)`` per valid point,
     ``seq = seq_start + list position`` as ``points_batch`` assigns it.
     Future and too-old points are dropped silently; each survivor goes
@@ -230,12 +213,16 @@ class Ingestor:
             return ["tier", "mb", "date"]
         return ["tier", "metric", "date"]
 
-    def prepare(self, df: DataFrame, info: MetricInfo, now: int) -> DataFrame:
-        """Validate + route + align one batch, adding the layout's ``mb``
-        column when bucketed — the exact rows ``write`` will append, so a
-        caller can cache this frame and reuse it as the rollup pass's
-        in-memory ``pending`` view (hoard_spark/streaming/ingest.py)."""
-        return self.with_mb(prepare_batch(df, info, now))
+    def prepare(self, df: DataFrame, by_sig, now: int) -> DataFrame:
+        """Validate + route + align a batch of the metrics ``by_sig``
+        names (``policy_dim``'s argument; rows of any other metric are
+        dropped), adding the layout's ``mb`` column when bucketed — the
+        exact rows ``write`` will append, which the engine's write core
+        caches and reuses as the rollup pass's in-memory ``pending``
+        view."""
+        return self.with_mb(
+            prepare_batch_multi(df, policy_dim(self.spark, by_sig), now)
+        )
 
     def with_mb(self, df: DataFrame) -> DataFrame:
         """Add the bucketed layout's ``mb`` column (no-op when unbucketed)."""

@@ -173,12 +173,6 @@ def _load_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Temp views for the few queries expressed in Spark SQL text."""
-    for t in TABLES:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 def present_sorted(df: DataFrame, *cols) -> DataFrame:
     """Terminal presentation sort for a BOUNDED conformance result.
 

@@ -933,16 +933,6 @@ _ANN_STEP = 50
 _CLONE_LABEL = -1
 
 
-def _planted_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The q39/q91 conformance corpus: embeddings plus a verbatim clone
-    of every ``_ANN_STEP``'th vector at ``vec_id + _ANN_OFFSET``."""
-    emb = load(spark, sf_dir, "embeddings")
-    clones = emb.where(F.col("vec_id") % _ANN_STEP == 0).select(
-        (F.col("vec_id") + F.lit(_ANN_OFFSET)).alias("vec_id"), "embedding"
-    )
-    return emb.select("vec_id", "embedding").unionByName(clones)
-
-
 def _unified_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE labeled corpus covering every planted-ANN construction:
     embeddings (real labels) + the q39/q91/q99 exact clones at

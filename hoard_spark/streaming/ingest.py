@@ -1,4 +1,5 @@
-"""Structured Streaming ingest — the streaming update/updateMany surface.
+"""Structured Streaming ingest — the stream adapter over the engine's
+Spark write path (``HoardEngine._ingest_prepared``).
 
 The reference has no streaming runtime, but its write path IS a streaming
 contract (SURVEY.md §2B): tumbling buckets (src/hoard.coffee:203), bounded
@@ -14,27 +15,22 @@ streaming aggregation. So the stream never holds aggregation state at all:
         1. validity filter + tier routing + aligned append   (batch ingest)
         2. incremental rollup of the touched buckets only    (propagate)
 
-Each micro-batch is a bounded batch job; LWW remains an at-read/compaction
-concern anchored on ``seq``. A batch without a source ``seq`` draws a fresh
-block of the warehouse-wide write sequence, so a replayed batch rewrites
-the same values under newer ``seq``s (same answer, extra rows until
-compaction); for true end-to-end idempotence under retries, carry a source
-``seq`` so replays collapse in the LWW dedup.
+Each micro-batch is a bounded batch job — the same job ``ingest_df`` runs
+for one metric; LWW remains an at-read/compaction concern anchored on
+``seq``. A batch without a source ``seq`` draws a fresh block of the
+warehouse-wide write sequence, so a replayed batch rewrites the same
+values under newer ``seq``s (same answer, extra rows until compaction);
+for true end-to-end idempotence under retries, carry a source ``seq`` so
+replays collapse in the LWW dedup.
 
-Multi-metric batches are grouped by retention-policy signature so each
-distinct policy costs one cascade write per batch, not one per metric —
-with millions of metrics and a handful of policies (the Graphite
-storage-schemas.conf pattern) this is the 100 TB-scale shape.
-
-Per-batch job budget (round 8, fused): routing joins the batch against a
-broadcast policy dimension (``prepare_batch_multi``), so ONE job both
-fills the prepared cache and collects, for every policy group at once,
-the metrics present and the rollup partitions touched; then the points
-append and the per-policy cascade writes run CONCURRENTLY off that cache
-(both are pure readers of it — the LWW collapse makes any interleaving of
-their disk visibility idempotent). Total: 2 + O(tiers) jobs per
-micro-batch, independent of metric AND policy count, with the append
-hidden under the cascade's wall-clock.
+What is stream-specific lives here: the synthesized ``seq`` block and its
+bit guards, and the grouping of the whole catalog by retention-policy
+signature, so each distinct policy costs one cascade write per batch, not
+one per metric — with millions of metrics and a handful of policies (the
+Graphite storage-schemas.conf pattern) this is the 100 TB-scale shape.
+Routing joins the batch against a broadcast policy dimension
+(``prepare_batch_multi``); the engine's write core then costs 2 +
+O(tiers) jobs per micro-batch, independent of metric AND policy count.
 """
 
 from __future__ import annotations
@@ -42,15 +38,12 @@ from __future__ import annotations
 import time
 from collections.abc import Callable
 
-from pyspark import InheritableThread
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from hoard_spark.engine import HoardEngine
-from hoard_spark.functions import bucket_date_col
 from hoard_spark.ingest import policy_dim, prepare_batch_multi
-from hoard_spark.rollup import plan_cascade
 
 
 def _policy_signature(info) -> tuple:
@@ -126,7 +119,7 @@ def ingest_microbatch(
     # Driver-side control plane: group the CATALOG's metrics by policy
     # signature (routing and alignment depend only on the policy, never
     # the metric name). The batch's own metric set is discovered by the
-    # fused touched pass below — no separate distinct job, and no
+    # engine's fused touched pass — no separate distinct job, and no
     # metric-name ``isin`` literal in any plan (a 100k-metric batch
     # would make that a planning hazard; the broadcast dim join is the
     # scalable form of the same filter).
@@ -142,149 +135,8 @@ def ingest_microbatch(
 
     prepared = engine.ingestor.with_mb(
         prepare_batch_multi(batch_df, policy_dim(engine.spark, by_sig), now)
-    ).cache()
-    try:
-        # ONE job fills the cache and answers, per policy group: which
-        # metrics does the batch touch, and which (tier, metric, date)
-        # rollup partitions do they dirty.
-        present, touched = _collect_touched(engine, prepared, by_sig)
-        if not present:
-            return
-        with engine._writer_lock():
-            _apply_microbatch(
-                engine, prepared, by_sig, present, touched, now, propagate
-            )
-    finally:
-        prepared.unpersist()
-
-
-def _collect_touched(engine, prepared, by_sig):
-    """One distinct job over the prepared cache: per policy group, the
-    metrics present and the (metric, coarse-bucket date) pairs per cascade
-    tier (the generalized ``_.uniq`` propagate-target dedup,
-    src/hoard.coffee:373-378). Single-archive groups contribute a
-    presence-only arm (``tk = 0``) so ``touch_many`` still sees them."""
-    frames = []
-    for sid, (info, _) in enumerate(by_sig):
-        base = prepared.where(F.col("_sig") == sid)
-        cascade = plan_cascade(info)
-        if not cascade:
-            frames.append(
-                base.select(
-                    F.lit(sid).alias("sid"),
-                    F.lit(0).alias("tk"),
-                    "metric",
-                    F.to_date(F.lit("1970-01-01")).alias("d"),
-                )
-            )
-            continue
-        for tier_k, _, lower_spp in cascade:
-            frames.append(
-                base.where(F.col("tier") <= tier_k).select(
-                    F.lit(sid).alias("sid"),
-                    F.lit(tier_k).alias("tk"),
-                    "metric",
-                    bucket_date_col(
-                        F.col("bucket_ts")
-                        - F.pmod(F.col("bucket_ts"), F.lit(lower_spp))
-                    ).alias("d"),
-                )
-            )
-    un = frames[0]
-    for f in frames[1:]:
-        un = un.unionByName(f)
-    # Steady-state micro-batches touch (metrics x days-per-batch) pairs —
-    # tiny — but a backfill batch replaying years of history would pull a
-    # huge list through the driver. Above the engine's cap, collect only
-    # the present-metric set (bounded by the metric universe) and hand the
-    # batch itself to propagate_many, whose own capped path recomputes
-    # each tier over the batch's min/max date range as a predicate.
-    cap = getattr(engine, "propagate_touched_cap", 0) or 0
-    rows = (
-        un.distinct().limit(cap + 1).collect()
-        if cap > 0
-        else un.distinct().collect()
     )
-    present: dict[int, set] = {}
-    if cap > 0 and len(rows) > cap:
-        for r in (
-            prepared.select("_sig", "metric").distinct().collect()
-        ):
-            present.setdefault(r["_sig"], set()).add(r["metric"])
-        return present, None
-    touched: dict[int, dict[int, set]] = {}
-    for r in rows:
-        present.setdefault(r["sid"], set()).add(r["metric"])
-        touched.setdefault(r["sid"], {}).setdefault(r["tk"], set()).add(
-            (r["metric"], str(r["d"]))
-        )
-    return present, touched
-
-
-def _apply_microbatch(engine, prepared, by_sig, present, touched, now, propagate):
-    # ONE catalog write for the whole batch (touch_many), not one per
-    # metric or policy — the control plane stays O(1) writes per batch.
-    all_present = sorted(set().union(*present.values()))
-    engine.catalog.touch_many(all_present, now)
-
-    # The points append and the rollup cascade are both pure readers of
-    # the prepared cache, so they run concurrently: the cascade's tier
-    # views take the micro-batch from memory (``pending``) and whatever
-    # subset of this batch's files a racing scan happens to see on disk
-    # collapses in LWW (identical (metric, tier, bucket, seq) rows), so
-    # every interleaving converges — same argument that makes
-    # foreachBatch replays idempotent. InheritableThread propagates the
-    # caller's job group/scheduler pool to the append's jobs.
-    err: list[BaseException] = []
-
-    def _append_points() -> None:
-        try:
-            engine.ingestor.write(
-                prepared.select(
-                    "metric", "tier", "bucket_ts", "date", "value", "seq",
-                    "ts", *(["mb"] if engine.metric_buckets else []),
-                )
-            )
-        except BaseException as e:  # surfaced after join below
-            err.append(e)
-
-    writer = InheritableThread(target=_append_points)
-    writer.start()
-    try:
-        if propagate:
-            for sid, (info, _) in enumerate(by_sig):
-                mets = sorted(present.get(sid, ()))
-                if not mets or len(info.archives) <= 1:
-                    continue
-                # ONE multi-metric cascade per policy group: O(tiers)
-                # Spark jobs, independent of metric count, scoped by the
-                # precomputed touched sets (no second distinct pass).
-                # touched=None => the batch blew the touched-pair cap
-                # (backfill): hand the rows to propagate_many as `batch`
-                # with the over-cap signal, so it skips straight to the
-                # per-tier date-range path instead of re-running the
-                # capped distinct-collect on a batch we already know
-                # overflows it (ADVICE r9).
-                sig_rows = prepared.where(F.col("_sig") == sid)
-                if touched is None:
-                    engine.propagate_many(
-                        mets,
-                        batch=sig_rows,
-                        pending=sig_rows,
-                        force_range=True,
-                    )
-                else:
-                    engine.propagate_many(
-                        mets,
-                        pending=sig_rows,
-                        touched_by_tier={
-                            k: v for k, v in touched[sid].items() if k >= 1
-                        },
-                    )
-    finally:
-        writer.join()
-    if err:
-        raise err[0]
+    engine._ingest_prepared(prepared, by_sig, now, propagate)
 
 
 def start_ingest(

@@ -226,6 +226,17 @@ def test_microbatch_after_flush_wins(spark, tmp_path, max_files):
     assert values == [1.0, None, None]
 
 
+@pytest.mark.parametrize("max_files", [32, 0])
+def test_all_invalid_flush_leaves_last_update(spark, tmp_path, max_files):
+    """A flush whose every point is dropped (future, too old) writes
+    nothing, so neither route moves the metric's lastUpdate."""
+    eng = HoardEngine(spark, str(tmp_path / "wh"), fetch_driver_max_files=max_files)
+    eng.create("m", POLICY, x_files_factor=XFF, now=NOW - DAY)
+    before = eng.info("m").last_update
+    eng.update_many("m", [(NOW + 60, 1.0), (NOW - 400 * DAY, 2.0)], now=NOW)
+    assert eng.info("m").last_update == before
+
+
 def test_legacy_seq_file_starts_above_disk(spark, tmp_path):
     """A warehouse from before the shared allocator — per-metric counters
     in the seq file, micro-batch rows with ``batch_id << 40`` seqs on disk

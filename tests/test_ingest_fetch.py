@@ -158,6 +158,27 @@ def test_too_old_points_dropped_and_tier_routing(engine):
     assert 2.0 in values2
 
 
+def test_ingest_df_writes_only_the_named_metric(engine):
+    """ingest_df is the one-metric case of the micro-batch write: a row of
+    another metric in the frame (here one with a different policy) is
+    dropped, not appended under its own name with the named metric's
+    routing and outside its catalog touch and cascade."""
+    from hoard_spark.ingest import POINTS_SCHEMA
+
+    now = 1_400_000_000
+    engine.create("a", [(60, 60), (600, 60)], now=now - 3600)
+    engine.create("b", [(3600, 24)], now=now - 3600)
+    df = engine.spark.createDataFrame(
+        [("a", now - 30, 1.0, 0), ("b", now - 30, 2.0, 1)], POINTS_SCHEMA
+    )
+    returned = engine.ingest_df("a", df, now=now)
+    assert {r["metric"] for r in engine._read_points().collect()} == {"a"}
+    assert returned is None
+    assert engine.info("b").last_update == 0
+    _, values = engine.fetch("a", now - 120, now, now=now)
+    assert 1.0 in values
+
+
 def test_fetch_single_tier_routing(engine):
     """fetch answers from ONE tier — the first whose retention covers
     now-from (src/hoard.coffee:437-438); resolutions never mix."""
