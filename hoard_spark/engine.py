@@ -46,12 +46,11 @@ import fcntl
 import io
 import json
 import os
-import re
 import time
 import uuid
 import zlib
 from contextlib import contextmanager
-from datetime import datetime, timedelta, timezone
+from datetime import datetime, timezone
 
 from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
@@ -62,13 +61,19 @@ from hoard_spark.catalog import Catalog, HoardError, MetricInfo
 from hoard_spark.fetch import (
     TimeInfo,
     collect_values,
+    date_span,
     fetch_df,
     plan_fetch,
     read_lww,
     read_values,
 )
-from hoard_spark.fsutil import WarehouseFS, is_data_file, strip_local_uri
-from hoard_spark.functions import align_ts, bucket_date_col, spine
+from hoard_spark.fsutil import (
+    SAFE_PART_RE,
+    WarehouseFS,
+    is_data_file,
+    strip_local_uri,
+)
+from hoard_spark.functions import align_ts, bucket_date_col
 from hoard_spark.ingest import Ingestor, lww, route_points, validate_single
 from hoard_spark.rollup import (
     merge_direct,
@@ -99,11 +104,6 @@ _ROLLUP_READ_SCHEMA = T.StructType(
         T.StructField("date", T.DateType()),
     ]
 )
-
-
-# partition-dir values Spark writes verbatim (no escaping); the driver-side
-# fetch fast path only handles these
-_SAFE_PART_RE = re.compile(r"[A-Za-z0-9._-]+\Z")
 
 
 DAY = 86400
@@ -246,12 +246,6 @@ class HoardEngine:
 
     def _mb_of(self, metric: str) -> int:
         return zlib.crc32(metric.encode("utf-8")) % self.metric_buckets
-
-    def _metric_pred(self, metric: str):
-        pred = F.col("metric") == metric
-        if self.metric_buckets:
-            pred = pred & (F.col("mb") == self._mb_of(metric))
-        return pred
 
     def _metrics_pred(self, metrics: list[str]):
         pred = F.col("metric").isin(metrics)
@@ -422,7 +416,7 @@ class HoardEngine:
         the points.
         """
         budget = self.fetch_driver_max_files
-        if budget <= 0 or self.metric_buckets or not _SAFE_PART_RE.match(metric):
+        if budget <= 0 or self.metric_buckets or not SAFE_PART_RE.match(metric):
             return False
         routed = route_points(info, points, now, seq_start)
         cascade = plan_cascade(info) if propagate else []
@@ -773,24 +767,14 @@ class HoardEngine:
         """
         if ts_range is None:
             return None
-        lo_s, hi_s = ts_range
-        lo_d = datetime.fromtimestamp(int(lo_s), tz=timezone.utc).date()
-        hi_d = datetime.fromtimestamp(int(hi_s), tz=timezone.utc).date()
-        return (F.col("date") >= F.lit(lo_d)) & (F.col("date") <= F.lit(hi_d))
-
-    def _direct_lww(
-        self,
-        metric: str,
-        tier: int,
-        ts_range: tuple[int, int] | None = None,
-    ) -> DataFrame:
-        pts = self._read_points().where(
-            (F.col("tier") == tier) & self._metric_pred(metric)
+        days = date_span(*ts_range)
+        if not days:
+            # to before from (an all-future fetch after the to-clamp):
+            # the window holds no bucket
+            return F.lit(False)
+        return (F.col("date") >= F.lit(days[0])) & (
+            F.col("date") <= F.lit(days[-1])
         )
-        dpred = self._date_pred(ts_range)
-        if dpred is not None:
-            pts = pts.where(dpred)
-        return lww(pts).select("metric", "bucket_ts", "value")
 
     def tier_view(
         self,
@@ -799,44 +783,12 @@ class HoardEngine:
         use_materialized: bool = True,
         ts_range: tuple[int, int] | None = None,
     ) -> DataFrame:
-        """LWW-normalized view of one tier: (metric, bucket_ts, value).
-
-        Tier 0 is the dedup view over raw appends; coarser tiers read the
-        materialized rollup when present, else compute the cascade on the
-        fly (correctness never depends on maintenance having run).
-
-        ``ts_range`` (epoch-seconds, [lo, hi)) scopes every underlying scan
-        to the touched ``date`` partitions; buckets are date-monotonic, so
-        the cascade can pass the same bounds all the way down.
-        """
-        info = self.catalog.info(metric)
-        if tier == 0:
-            return self._direct_lww(metric, 0, ts_range)
-        if use_materialized and self._is_materialized(tier, metric):
-            view = self._read_rollups().where(
-                (F.col("tier") == tier) & self._metric_pred(metric)
-            )
-            dpred = self._date_pred(ts_range)
-            if dpred is not None:
-                view = view.where(dpred)
-            return view.select("metric", "bucket_ts", "value")
-        higher = info.archives[tier - 1]
-        lower = info.archives[tier]
-        cascade_range = ts_range
-        if cascade_range is not None:
-            # widen the lower bound to the lower-tier bucket start so the
-            # finer tier contributes every row of the first covered bucket
-            lo_s, hi_s = cascade_range
-            cascade_range = (align_ts(lo_s, lower.seconds_per_point), hi_s)
-        rolled = rollup_tier(
-            self.tier_view(metric, tier - 1, use_materialized, cascade_range),
-            lower.seconds_per_point,
-            higher.seconds_per_point,
-            info.x_files_factor,
+        """LWW-normalized view of one tier: (metric, bucket_ts, value) —
+        the one-metric case of ``_tier_view_many``."""
+        self.catalog.info(metric)  # an unknown metric raises, as in fetch
+        return self._tier_view_many(
+            [metric], tier, ts_range, use_materialized=use_materialized
         )
-        return merge_direct(
-            rolled, self._direct_lww(metric, tier, cascade_range)
-        ).select("metric", "bucket_ts", "value")
 
     # -------------------------------------------------------------- rollup
     def _direct_lww_many(
@@ -860,14 +812,13 @@ class HoardEngine:
         dpred = self._date_pred(ts_range)
         if dpred is not None:
             pts = pts.where(dpred)
-        pts = pts.select(*cols)
         if pending is not None:
             extra = pending.where(
                 (F.col("tier") == tier) & self._metrics_pred(metrics)
             )
             if dpred is not None:
                 extra = extra.where(dpred)
-            pts = pts.unionByName(extra.select(*cols))
+            pts = pts.select(*cols).unionByName(extra.select(*cols))
         return lww(pts).select("metric", "bucket_ts", "value")
 
     def _tier_view_many(
@@ -876,27 +827,71 @@ class HoardEngine:
         tier: int,
         ts_range: tuple[int, int] | None = None,
         pending: DataFrame | None = None,
+        use_materialized: bool = True,
     ) -> DataFrame:
-        """Multi-metric tier view: one scan for every materialized metric,
-        per-metric cascade fallback only for the stragglers (steady-state
-        streaming has none, so this stays a single pruned scan)."""
+        """LWW-normalized view of one tier for metrics SHARING one policy:
+        (metric, bucket_ts, value).
+
+        Tier 0 is the dedup view over raw appends. A coarser tier reads
+        the materialized rollup in one scan for every metric that has one
+        (none without ``use_materialized``); the others ("stragglers")
+        get the cascade on the fly — ONE multi-metric recursion into the
+        finer tier, rolled up and merged with this tier's direct points —
+        so correctness never depends on maintenance having run and the
+        plan does not grow with the straggler count. The cascade's spans
+        and xff come from the first straggler: callers pass metrics of
+        one policy (``_require_shared_policy`` checks it; export_tree
+        groups by policy signature).
+
+        ``ts_range`` (epoch-seconds, [lo, hi)) scopes every underlying scan
+        to the touched ``date`` partitions; buckets are date-monotonic, so
+        the cascade can pass the same bounds all the way down. ``pending``
+        is unioned into every points read (see ``_direct_lww_many``).
+        """
         if tier == 0:
             return self._direct_lww_many(metrics, 0, ts_range, pending)
-        materialized = [
-            m for m in metrics if self._is_materialized(tier, m)
-        ]
+        done = {
+            m for m in metrics
+            if use_materialized and self._is_materialized(tier, m)
+        }
+        stragglers = [m for m in metrics if m not in done]
         parts: list[DataFrame] = []
-        if materialized:
+        if done:
             view = self._read_rollups().where(
-                (F.col("tier") == tier) & self._metrics_pred(materialized)
+                (F.col("tier") == tier) & self._metrics_pred(sorted(done))
             )
             dpred = self._date_pred(ts_range)
             if dpred is not None:
                 view = view.where(dpred)
             parts.append(view.select("metric", "bucket_ts", "value"))
-        for m in metrics:
-            if m not in materialized:
-                parts.append(self.tier_view(m, tier, ts_range=ts_range))
+        if stragglers:
+            info = self.catalog.info(stragglers[0])
+            higher = info.archives[tier - 1]
+            lower = info.archives[tier]
+            cascade_range = ts_range
+            if cascade_range is not None:
+                # widen the lower bound to the lower-tier bucket start so
+                # the finer tier contributes every row of the first
+                # covered bucket
+                lo_s, hi_s = cascade_range
+                cascade_range = (align_ts(lo_s, lower.seconds_per_point), hi_s)
+            rolled = rollup_tier(
+                self._tier_view_many(
+                    stragglers, tier - 1, cascade_range, pending,
+                    use_materialized,
+                ),
+                lower.seconds_per_point,
+                higher.seconds_per_point,
+                info.x_files_factor,
+            )
+            direct = self._direct_lww_many(
+                stragglers, tier, cascade_range, pending
+            )
+            parts.append(
+                merge_direct(rolled, direct).select(
+                    "metric", "bucket_ts", "value"
+                )
+            )
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -1160,26 +1155,11 @@ class HoardEngine:
     def fetch(
         self, metric: str, from_ts: int, to_ts: int, now: int | None = None
     ) -> tuple[TimeInfo, list[float | None]]:
-        """Range query (O7): ``(timeInfo, values)`` exactly as the reference.
-
-        Small windows short-circuit the Spark job entirely (VERDICT r6
-        item 6): a dashboard fetch whose pruned partition list is at most
-        ``fetch_driver_max_files`` parquet files is read driver-side
-        through the Hadoop FS API and LWW-merged in Python — identical
-        values (property-pinned vs the Spark path), ~ms latency instead
-        of the ~0.5 s per-job floor. Wide windows, unmaterialized coarse
-        tiers, and escaped metric names fall through to the Spark plan.
-        """
-        now = int(now if now is not None else time.time())
-        info = self.catalog.info(metric)
-        archive, ti = plan_fetch(info, int(from_ts), int(to_ts), now)
-        fast = self._fetch_fast_values(metric, archive.tier, ti)
-        if fast is not None:
-            return ti, fast
-        view = self.tier_view(
-            metric, archive.tier, ts_range=(ti.from_interval, ti.to_interval)
-        )
-        return ti, collect_values(fetch_df(view, ti), ti)
+        """Range query (O7): ``(timeInfo, values)`` exactly as the reference
+        — the one-metric case of ``fetch_many``: the same driver route
+        (``_fetch_fast_values``) and the same Spark fallback."""
+        ti, series = self.fetch_many([metric], from_ts, to_ts, now)
+        return ti, series[metric]
 
     def _date_span_ok(self, n_days: int) -> bool:
         """The driver routes budget dir LISTINGS as well as files: each
@@ -1203,9 +1183,11 @@ class HoardEngine:
             return None
         if tier > 0 and not self._is_materialized(tier, metric):
             return None
-        if not _SAFE_PART_RE.match(metric):
+        if not self.metric_buckets and not SAFE_PART_RE.match(metric):
             # Spark escapes special chars in partition-dir values; rather
             # than reimplement that encoding, route such names to Spark
+            # (the bucketed layout's dirs are mb=N, and the metric is a
+            # data column read_lww filters, so any name reads here)
             return None
         root = self.points_path if tier == 0 else self.rollups_path
         mid = (
@@ -1213,16 +1195,11 @@ class HoardEngine:
             if self.metric_buckets
             else f"metric={metric}"
         )
-        # same date span as _date_pred: date(from_interval)..date(to_interval)
-        lo_d = datetime.fromtimestamp(ti.from_interval, tz=timezone.utc).date()
-        hi_d = datetime.fromtimestamp(ti.to_interval, tz=timezone.utc).date()
-        if not self._date_span_ok((hi_d - lo_d).days + 1):
+        # the same date partitions _date_pred prunes the Spark scan to
+        days = date_span(ti.from_interval, ti.to_interval)
+        if not self._date_span_ok(len(days)):
             return None
-        dates = []
-        d = lo_d
-        while d <= hi_d:
-            dates.append(d.isoformat())
-            d += timedelta(days=1)
+        dates = [d.isoformat() for d in days]
         # ONE listing round-trip for the whole window on remote stores
         # (globStatus date alternation); per-present-date scandir locally.
         files = self.fs.list_date_files(f"{root}/tier={tier}/{mid}", dates)
@@ -1245,16 +1222,10 @@ class HoardEngine:
     def fetch_dataframe(
         self, metric: str, from_ts: int, to_ts: int, now: int | None = None
     ) -> tuple[TimeInfo, DataFrame]:
-        """Distributed fetch: the gap-filled result as an unactioned plan."""
-        now = int(now if now is not None else time.time())
-        info = self.catalog.info(metric)
-        archive, ti = plan_fetch(info, int(from_ts), int(to_ts), now)
-        # scope the scan to the fetch window's date partitions — a 1-hour
-        # fetch over a 3-year metric must read 1-2 partitions, not ~1100
-        view = self.tier_view(
-            metric, archive.tier, ts_range=(ti.from_interval, ti.to_interval)
-        )
-        return ti, fetch_df(view, ti)
+        """Distributed fetch: the gap-filled ``(bucket_ts, value)`` result
+        as an unactioned plan — ``fetch_many_dataframe`` of one metric."""
+        ti, df = self.fetch_many_dataframe([metric], from_ts, to_ts, now)
+        return ti, df.select("bucket_ts", "value")
 
     def fetch_many(
         self,
@@ -1265,12 +1236,13 @@ class HoardEngine:
     ) -> tuple[TimeInfo, dict[str, list[float | None]]]:
         """Scalar dashboard fetch: ``(timeInfo, {metric: values})``.
 
-        Small windows answer driver-side per series (the fetch()
-        short-circuit; ~ms per series, a 20-series dashboard stays well
-        under one Spark job's floor — co-bucketed series re-read shared
-        files, acceptable at these sizes). If ANY series exceeds the
-        file budget or needs an on-the-fly cascade, the whole request
-        falls back to fetch_many_dataframe's single pruned scan.
+        Small windows answer driver-side per series (the
+        ``_fetch_fast_values`` short-circuit; ~ms per series, a 20-series
+        dashboard stays well under one Spark job's floor — co-bucketed
+        series re-read shared files, acceptable at these sizes). If ANY
+        series exceeds the file budget or needs an on-the-fly cascade, the
+        whole request falls back to the Spark read: ``fetch_df`` over one
+        pruned multi-metric tier view, collected by ``collect_values``.
         """
         now = int(now if now is not None else time.time())
         info = self._require_shared_policy(metrics, "fetch_many")
@@ -1284,14 +1256,8 @@ class HoardEngine:
             fast[m] = v
         if fast is not None:
             return ti, fast
-        ti, df = self.fetch_many_dataframe(metrics, from_ts, to_ts, now)
-        n = max(0, (ti.to_interval - ti.from_interval) // ti.step)
-        out: dict[str, list[float | None]] = {m: [None] * n for m in metrics}
-        for row in df.collect():
-            idx = (row["bucket_ts"] - ti.from_interval) // ti.step
-            if 0 <= idx < n:
-                out[row["metric"]][idx] = row["value"]
-        return ti, out
+        df = self._gap_filled(metrics, archive.tier, ti)
+        return ti, collect_values(df, ti, metrics)
 
     def fetch_many_dataframe(
         self,
@@ -1305,28 +1271,24 @@ class HoardEngine:
         N series must not cost N driver round-trips).
 
         All metrics must share the policy signature so a single tier
-        answers; the per-metric spine is the bucket sequence crossed with
-        the (broadcast-small) metric list.
+        answers; an unmaterialized tier is one on-the-fly cascade for all
+        of them (``_tier_view_many``).
         """
         now = int(now if now is not None else time.time())
         info = self._require_shared_policy(metrics, "fetch_many")
         archive, ti = plan_fetch(info, int(from_ts), int(to_ts), now)
+        return ti, self._gap_filled(metrics, archive.tier, ti)
+
+    def _gap_filled(
+        self, metrics: list[str], tier: int, ti: TimeInfo
+    ) -> DataFrame:
+        """The Spark read: ``fetch_df`` over the tier view scoped to the
+        window's date partitions (a 1-hour fetch over a 3-year metric
+        reads 1-2 partitions, not ~1100)."""
         view = self._tier_view_many(
-            metrics, archive.tier, (ti.from_interval, ti.to_interval)
+            metrics, tier, (ti.from_interval, ti.to_interval)
         )
-        sp = spine(self.spark, ti.from_interval, ti.to_interval, ti.step)
-        mdf = self.spark.createDataFrame([(m,) for m in metrics], "metric string")
-        grid = sp.crossJoin(F.broadcast(mdf))
-        data = view.where(
-            (F.col("bucket_ts") >= ti.from_interval)
-            & (F.col("bucket_ts") < ti.to_interval)
-        )
-        out = (
-            grid.join(F.broadcast(data), ["metric", "bucket_ts"], "left")
-            .orderBy("metric", "bucket_ts")
-            .select("metric", "bucket_ts", "value")
-        )
-        return ti, out
+        return fetch_df(view, ti, metrics)
 
     def _require_shared_policy(
         self, metrics: list[str], op: str

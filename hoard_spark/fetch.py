@@ -15,15 +15,20 @@ Reference semantics reproduced (src/hoard.coffee:426-513):
 Spark design: the routing decision is driver-side planning (the
 materialized-view-routing choice, SURVEY.md §4); the data path is a single
 partition-pruned Parquet scan filtered on ``bucket_ts`` range, left-joined
-against a generated bucket spine for gap-fill. For small result vectors the
-driver collects; ``fetch_df`` returns the undriven DataFrame for distributed
-consumers.
+against a generated bucket spine for gap-fill. The Spark read is
+multi-metric throughout: ``fetch_df`` gap-fills every requested series of
+one tier view in one plan and ``collect_values`` lays the collected rows
+out as ``{metric: values}``; a single-metric fetch is the one-metric case.
+``read_lww``/``read_values`` are the driver-side twin (no Spark job) over
+the same pruned partition files, and ``date_span`` names the ``date=``
+partitions both sides prune to.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass
+from datetime import date, datetime, timedelta, timezone
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -66,39 +71,61 @@ def plan_fetch(
     return archive, TimeInfo(from_interval, to_interval, spp)
 
 
-def fetch_df(tier_view: DataFrame, ti: TimeInfo) -> DataFrame:
-    """Gap-filled result: one row per bucket in [from_interval, to_interval).
+def date_span(lo_s: int, hi_s: int) -> list[date]:
+    """UTC dates ``date(lo_s)..date(hi_s)``, both ends inclusive: the
+    ``date=`` partitions a fetch window's buckets can live in."""
+    lo = datetime.fromtimestamp(int(lo_s), tz=timezone.utc).date()
+    hi = datetime.fromtimestamp(int(hi_s), tz=timezone.utc).date()
+    return [lo + timedelta(days=i) for i in range((hi - lo).days + 1)]
+
+
+def _n_slots(ti: TimeInfo) -> int:
+    return max(0, (ti.to_interval - ti.from_interval) // ti.step)
+
+
+def fetch_df(
+    tier_view: DataFrame, ti: TimeInfo, metrics: list[str]
+) -> DataFrame:
+    """Gap-filled result: ``(metric, bucket_ts, value)``, one row per
+    metric and bucket in [from_interval, to_interval), ordered by
+    ``metric, bucket_ts``.
 
     ``tier_view`` must have columns ``metric, bucket_ts, value`` with one row
-    per bucket (LWW-normalized). The bucket_ts range predicate is pushed into
-    the Parquet scan (partition pruning on date + row-group min/max); the
-    spine join is a broadcast of the generated sequence.
+    per (metric, bucket) (LWW-normalized). The bucket_ts range predicate is
+    pushed into the Parquet scan (row-group min/max; the caller's view
+    carries the date partition predicate); the spine is the bucket sequence
+    with the metric list exploded onto every bucket.
     """
-    spark = tier_view.sparkSession
-    sp = spine(spark, ti.from_interval, ti.to_interval, ti.step)
+    sp = spine(tier_view.sparkSession, ti.from_interval, ti.to_interval, ti.step)
+    # a literal array, not createDataFrame: a Python-list DataFrame is an
+    # RDD, and broadcasting it costs one more Spark job per fetch
+    names = F.array(*[F.lit(m) for m in metrics])
     data = tier_view.where(
         (F.col("bucket_ts") >= ti.from_interval) & (F.col("bucket_ts") < ti.to_interval)
-    ).select("bucket_ts", "value")
-    # Both sides are bounded by the output bucket count after the range
+    )
+    # Both sides are bounded by the output row count after the range
     # filter; broadcast the data side so the gap-fill join never shuffles
     # (Spark can't build the left side of a LEFT join, so the hint goes on
     # the probe data, not the spine).
     return (
-        sp.join(F.broadcast(data), "bucket_ts", "left")
-        .orderBy("bucket_ts")
-        .select("bucket_ts", "value")
+        sp.select(F.explode(names).alias("metric"), "bucket_ts")
+        .join(F.broadcast(data), ["metric", "bucket_ts"], "left")
+        .orderBy("metric", "bucket_ts")
     )
 
 
-def collect_values(result: DataFrame, ti: TimeInfo) -> list[float | None]:
-    """Driver-side values vector in bucket order (the reference API shape)."""
-    n = max(0, (ti.to_interval - ti.from_interval) // ti.step)
-    values: list[float | None] = [None] * n
+def collect_values(
+    result: DataFrame, ti: TimeInfo, metrics: list[str]
+) -> dict[str, list[float | None]]:
+    """Driver-side ``{metric: values}``, each vector in bucket order (the
+    reference API shape)."""
+    n = _n_slots(ti)
+    out: dict[str, list[float | None]] = {m: [None] * n for m in metrics}
     for row in result.collect():
         idx = (row["bucket_ts"] - ti.from_interval) // ti.step
         if 0 <= idx < n:
-            values[idx] = row["value"]
-    return values
+            out[row["metric"]][idx] = row["value"]
+    return out
 
 
 def read_lww(
@@ -165,8 +192,7 @@ def read_values(
     """The driver-side fetch: ``read_lww`` over the window's partition
     files, laid out as the gap-filled values vector."""
     best = read_lww(files, open_file, metric, (ti.from_interval, ti.to_interval))
-    n = max(0, (ti.to_interval - ti.from_interval) // ti.step)
-    values: list[float | None] = [None] * n
+    values: list[float | None] = [None] * _n_slots(ti)
     for b, row in best.items():
         values[(b - ti.from_interval) // ti.step] = row[1]
     return values

@@ -15,6 +15,7 @@ see hoard_spark/catalog.py); only the data plane goes through Hadoop.
 from __future__ import annotations
 
 import os
+import re
 from urllib.parse import urlsplit
 
 from pyspark.sql import SparkSession
@@ -45,6 +46,11 @@ def is_data_file(name: str, ext: str = ".parquet") -> bool:
     skips names starting with ``_`` or ``.`` (``_SUCCESS``, checksum
     files, staged writes), so every driver-side listing must too."""
     return name.endswith(ext) and not name.startswith(("_", "."))
+
+
+# partition-dir values Spark writes verbatim (no escaping); the driver-side
+# routes build ``metric=M`` paths only for these
+SAFE_PART_RE = re.compile(r"[A-Za-z0-9._-]+\Z")
 
 
 class WarehouseFS:

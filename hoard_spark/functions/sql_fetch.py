@@ -8,13 +8,16 @@ Shape: a Python UDTF (the declared table-function escape hatch,
 ``hoard_spark/functions/udtf.py``) whose ``eval`` runs a **JVM-free
 fetch** — catalog JSON + the same ``plan_fetch`` tier routing the
 engine uses + pyarrow reads of the pruned ``(tier, metric|mb, date)``
-partition files + Python LWW + the gap-fill spine. This mirrors the
-engine's driver-side fast path (``HoardEngine._fetch_fast_values``):
-a fetch answers a dashboard-sized window (``ti`` buckets, bounded by
-the archive's ``points``), so the data volume is UDTF-appropriate by
-construction — the 100 TB story is the partition pruning (tier + metric
-+ date dirs), exactly the same pruning the Spark plan gets, done with
-one directory listing per date.
+partition files (``fetch.date_span``) + Python LWW + the gap-fill spine
+(``fetch.read_values``). This is the twin of the driver route that the
+engine's ``fetch`` and ``fetch_many`` share
+(``HoardEngine._fetch_fast_values``), name rule included: a metric name
+Spark escapes is readable only in the bucketed layout, whose dirs are
+``mb=N``. A fetch answers a dashboard-sized window (``ti`` buckets,
+bounded by the archive's ``points``), so the data volume is
+UDTF-appropriate by construction — the 100 TB story is the partition
+pruning (tier + metric + date dirs), exactly the same pruning the Spark
+plan gets, done with one directory listing per date.
 
 Value contract: identical to ``HoardEngine.fetch`` (property-pinned in
 tests/test_sql_fetch.py against goldens G2/G4 and randomized corpora)
@@ -38,16 +41,12 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import time
 import zlib
-from datetime import datetime, timedelta, timezone
 
 from hoard_spark.catalog import Catalog, HoardError
-from hoard_spark.fetch import TimeInfo, plan_fetch, read_values
-from hoard_spark.fsutil import is_data_file, strip_local_uri
-
-_SAFE_PART_RE = re.compile(r"[A-Za-z0-9._-]+\Z")
+from hoard_spark.fetch import TimeInfo, date_span, plan_fetch, read_values
+from hoard_spark.fsutil import SAFE_PART_RE, is_data_file, strip_local_uri
 
 
 def _resolve_fs(warehouse_dir: str):
@@ -132,7 +131,7 @@ def python_fetch(
                 "engine API, which computes the cascade as a Spark plan)"
             )
 
-    if not _SAFE_PART_RE.match(metric) and not metric_buckets:
+    if not SAFE_PART_RE.match(metric) and not metric_buckets:
         raise HoardError(
             f"hoard_fetch: metric name {metric!r} needs Spark's partition "
             "escaping — fetch it through the engine API"
@@ -144,13 +143,7 @@ def python_fetch(
         if metric_buckets
         else f"metric={metric}"
     )
-    lo_d = datetime.fromtimestamp(ti.from_interval, tz=timezone.utc).date()
-    hi_d = datetime.fromtimestamp(ti.to_interval, tz=timezone.utc).date()
-    dates = []
-    d = lo_d
-    while d <= hi_d:
-        dates.append(d.isoformat())
-        d += timedelta(days=1)
+    dates = [d.isoformat() for d in date_span(ti.from_interval, ti.to_interval)]
     files = _list_date_files(fs, f"{root}/tier={tier}/{mid}", dates)
 
     if not files and info.last_update > 0:

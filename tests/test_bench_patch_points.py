@@ -2,7 +2,9 @@
 phase's ``_install`` in ``perfbench/``). A refactor that renames or
 removes one must fail here, in the test suite, not mid-way through a
 traced benchmark run. The stub tracer only resolves each patch point; it
-wraps nothing."""
+wraps nothing. A name that still resolves but is no longer called would
+make its spans read 0, so the fetch patch points are also called through
+with counters in their place."""
 
 import importlib
 
@@ -25,3 +27,33 @@ def test_benchmark_patch_points_resolve(phase):
     tracer = _ResolvingTracer()
     importlib.import_module(f"perfbench.{phase}")._install(tracer)
     assert tracer.points
+
+
+def test_forced_spark_fetches_pass_the_traced_fetch_spans(engine, monkeypatch):
+    """The ``tsdb`` phase traces ``fetch.fetch_df`` and
+    ``fetch.collect_values`` by patching these names on
+    ``hoard_spark.engine``: a Spark-route ``fetch`` and ``fetch_many``
+    must call both through that module, or the spans read 0 silently."""
+    import hoard_spark.engine as eng_mod
+    from hoard_spark.engine import HoardEngine
+
+    calls = []
+    for name in ("fetch_df", "collect_values"):
+        real = getattr(eng_mod, name)
+
+        def counted(*a, _name=name, _real=real, **kw):
+            calls.append(_name)
+            return _real(*a, **kw)
+
+        monkeypatch.setattr(eng_mod, name, counted)
+    now = 1_400_000_000
+    engine.create("m", [(3600, 48)])
+    engine.update_many("m", [(now - 3600, 1.0)], now=now)
+    slow = HoardEngine(engine.spark, engine.warehouse_dir, fetch_driver_max_files=0)
+    for fetch in (
+        lambda: slow.fetch("m", now - 7200, now, now=now),
+        lambda: slow.fetch_many(["m"], now - 7200, now, now=now),
+    ):
+        calls.clear()
+        fetch()
+        assert sorted(calls) == ["collect_values", "fetch_df"]

@@ -161,6 +161,27 @@ def test_bucketed_layout_fast_path(spark, tmp_path):
         assert v_f == v_s and want in v_f
 
 
+def test_bucketed_layout_reads_escaped_name_on_driver(spark, tmp_path):
+    """The bucketed layout's dirs are mb=N, so a name Spark would escape
+    in a metric=M dir still reads driver-side (as hoard_fetch reads it)
+    and equals the forced-Spark fetch."""
+    from hoard_spark.fetch import TimeInfo
+
+    eng = _mk(spark, tmp_path, name="mbesc", metric_buckets=4)
+    for m in ("a b=c", "a b"):
+        eng.create(m, [(3600, 48)])
+    eng.update_many("a b=c", [(NOW - 2 * 3600 + 5, 4.0)], now=NOW)
+    eng.update_many("a b", [(NOW - 2 * 3600 + 5, 5.0)], now=NOW)
+    ti = TimeInfo(NOW - 2 * 3600, NOW + 3600, 3600)
+    assert eng._fetch_fast_values("a b=c", 0, ti) == [4.0, None, None]
+    slow = HoardEngine(
+        spark, str(tmp_path / "mbesc"), fetch_driver_max_files=0
+    )
+    got = eng.fetch("a b=c", NOW - 3 * 3600, NOW, now=NOW)
+    assert got == slow.fetch("a b=c", NOW - 3 * 3600, NOW, now=NOW)
+    assert 4.0 in got[1] and 5.0 not in got[1]
+
+
 def test_fetch_many_scalar_parity_and_fallback(loaded):
     """fetch_many (scalar): per-series fast path must equal per-metric
     fetch(); the forced-Spark fallback must equal it too."""

@@ -90,6 +90,20 @@ def test_g3c_clamping_and_errors(engine):
     # an all-future range collapses to an empty vector after the to-clamp
     _, values = engine.fetch("clamp", now + 100, now + 200, now=now)
     assert values == []
+    # ... also when the window crosses UTC midnight, so from_interval's
+    # date is after to_interval's, on the driver route and on Spark
+    from hoard_spark.engine import HoardEngine
+
+    late = 1_700_006_400 - 3600  # 23:00 UTC
+    slow = HoardEngine(
+        engine.spark, engine.warehouse_dir, fetch_driver_max_files=0
+    )
+    for eng in (engine, slow):
+        ti3, values = eng.fetch("clamp", late + 7200, late + 7300, now=late)
+        assert ti3.from_interval > ti3.to_interval
+        assert values == []
+        _, df = eng.fetch_dataframe("clamp", late + 7200, late + 7300, now=late)
+        assert df.collect() == []
 
 
 def test_update_single_point_and_future_rejection(engine):
@@ -268,6 +282,43 @@ def test_fetch_many_rejects_mixed_policies(engine):
     engine.create("m2", [(60, 120), (3600, 48), (86400, 30)])
     with _pytest.raises(HoardError, match="sharing one retention policy"):
         engine.fetch_many_dataframe(["m1", "m2"], 0, 1, now=2)
+
+
+def test_unmaterialized_tier_is_one_cascade_for_all_metrics(spark, engine):
+    """A window routed to a tier no metric has materialized computes the
+    cascade on the fly ONCE for all metrics: two points scans (the tier-0
+    recursion and tier 1's direct points), not two per metric; values
+    equal per-metric fetch and the hand-computed rollup on both routes."""
+    from hoard_spark.engine import HoardEngine
+
+    now = 3600 * 389_000
+    metrics = ["s.a", "s.b", "s.c"]
+    for k, m in enumerate(metrics):
+        engine.create(m, [(60, 180), (3600, 48)])
+        pts = [(now - 60 * j, float(100 * k + j)) for j in range(1, 121)]
+        # older than tier 0's 3 h retention: routed straight to tier 1
+        pts.append((now - 4 * 3600 + 5, 7.0 + k))
+        engine.update_many(m, pts, now=now, propagate=False)
+    frm = now - 5 * 3600
+    assert not any(engine._is_materialized(1, m) for m in metrics)
+
+    ti, df = engine.fetch_many_dataframe(metrics, frm, now, now=now)
+    assert ti.step == 3600
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
+    # points scans read ``seq``; a rollups scan would read ``known``
+    assert len(scans) == 2 and all("seq:bigint" in ln for ln in scans), plan
+
+    want = {
+        m: [7.0 + k, None, 90.5 + 100 * k, 30.5 + 100 * k, None]
+        for k, m in enumerate(metrics)
+    }
+    slow = HoardEngine(spark, engine.warehouse_dir, fetch_driver_max_files=0)
+    for eng in (engine, slow):
+        ti_m, series = eng.fetch_many(metrics, frm, now, now=now)
+        assert ti_m == ti and series == want
+        for m in metrics:
+            assert eng.fetch(m, frm, now, now=now) == (ti, want[m])
 
 
 # ------------------------------------------------- warehouse robustness

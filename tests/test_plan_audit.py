@@ -104,6 +104,20 @@ def test_fetch_prunes_partitions(spark, engine):
     )
 
 
+def test_fetch_gap_fill_grid_is_generated(spark, engine):
+    """The spine × metric-list grid of the Spark fetch is generated in the
+    plan: a DataFrame built from a Python list is an RDD scan, and
+    broadcasting it runs one more Spark job on every fetch."""
+    now = 1_400_000_000
+    for m in ("cpu", "mem"):
+        engine.create(m, [(3600, 48), (86400, 30)])
+        engine.update_many(m, [(now - 3600, 1.0)], now=now)
+    _ti, df = engine.fetch_many_dataframe(["cpu", "mem"], now - 7200, now, now=now)
+    plan = plan_of(df)
+    assert "ExistingRDD" not in plan, plan
+    assert "NestedLoopJoin" not in plan and "CartesianProduct" not in plan, plan
+
+
 def test_pivot_is_single_pass(spark):
     """Explicit pivot values => one parquet scan (no values-discovery
     job) and one aggregate pipeline."""

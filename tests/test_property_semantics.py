@@ -149,7 +149,7 @@ def test_fetch_window_matches_model(spark, ladder, pts, from_off, span):
     view = spark.createDataFrame(
         tier_rows, "metric string, bucket_ts long, value double"
     )
-    got = collect_values(fetch_df(view, ti), ti)
+    got = collect_values(fetch_df(view, ti, ["m"]), ti, ["m"])["m"]
     expected = [
         model.get((archive.tier, b))
         for b in range(ti.from_interval, ti.to_interval, spp)

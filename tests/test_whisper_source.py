@@ -72,7 +72,7 @@ def test_import_tree_roundtrip_and_lww(spark, engine):
     now = bucket + 1800
     engine.update_many("large", [(bucket + 5, old_value + 123.0)], now=now)
     got = dict(
-        engine._direct_lww("large", 0)
+        engine._direct_lww_many(["large"], 0)
         .select("bucket_ts", "value")
         .collect()
     )
