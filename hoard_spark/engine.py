@@ -71,6 +71,7 @@ from hoard_spark.fsutil import (
     SAFE_PART_RE,
     WarehouseFS,
     is_data_file,
+    read_parquet_or_empty,
     strip_local_uri,
 )
 from hoard_spark.functions import align_ts, bucket_date_col
@@ -726,24 +727,12 @@ class HoardEngine:
         )
 
     def _read_parquet_root(self, path: str, schema: T.StructType) -> DataFrame:
-        """Read a warehouse root, treating ONLY path-not-found as empty.
-
-        A not-yet-written root is a normal state (fresh warehouse); any
-        other analysis failure — corrupted footers, a conflicting schema —
-        must raise, not silently read as "no data" (a corrupted warehouse
-        answering every fetch with gaps is a wrong answer, not an empty
-        one).
-        """
-        from pyspark.errors import AnalysisException
-
+        """Read a warehouse root; only an absent root reads as empty
+        (``fsutil.read_parquet_or_empty`` — a corrupted warehouse answering
+        every fetch with gaps is a wrong answer, not an empty one)."""
         if not self.fs.isdir(path):
             return self.spark.createDataFrame([], schema)
-        try:
-            return self.spark.read.schema(schema).parquet(path)
-        except AnalysisException as e:
-            if "PATH_NOT_FOUND" in str(getattr(e, "errorClass", "") or str(e)):
-                return self.spark.createDataFrame([], schema)
-            raise
+        return read_parquet_or_empty(self.spark, path, schema)
 
     def _read_points(self) -> DataFrame:
         return self._read_parquet_root(

@@ -18,7 +18,7 @@ import os
 import re
 from urllib.parse import urlsplit
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def strip_local_uri(p: str) -> str | None:
@@ -46,6 +46,23 @@ def is_data_file(name: str, ext: str = ".parquet") -> bool:
     skips names starting with ``_`` or ``.`` (``_SUCCESS``, checksum
     files, staged writes), so every driver-side listing must too."""
     return name.endswith(ext) and not name.startswith(("_", "."))
+
+
+def read_parquet_or_empty(spark: SparkSession, path: str, schema) -> DataFrame:
+    """Read a parquet root with ``schema`` (a StructType or DDL string),
+    treating ONLY path-not-found as empty.
+
+    A not-yet-written root is a normal state (a fresh warehouse or store);
+    any other analysis failure — corrupted footers, a conflicting schema —
+    must raise, not silently read as "no data"."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.schema(schema).parquet(path)
+    except AnalysisException as e:
+        if "PATH_NOT_FOUND" in str(getattr(e, "errorClass", "") or str(e)):
+            return spark.createDataFrame([], schema)
+        raise
 
 
 # partition-dir values Spark writes verbatim (no escaping); the driver-side

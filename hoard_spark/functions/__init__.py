@@ -56,3 +56,10 @@ def spine(
             )
         ).alias("bucket_ts")
     )
+
+
+def split_words() -> Column:
+    """The text surfaces' tokenizer: the ``text`` column trimmed and split
+    on runs of spaces, case kept — one shared form, so every query and
+    operator that counts or shingles words agrees on what a word is."""
+    return F.split(F.trim("text"), " +")

@@ -11,7 +11,9 @@ corpus — as one call on their own data.
 Scale discipline (identical to the query twins, VERDICT r2):
 - candidates come ONLY from the (band_id, band_hash) equi-join on
   MinHash bands — never an all-pairs crossJoin;
-- signatures are one shuffle (128 codegen MIN aggs over shingle rows);
+- signatures are one shuffle (128 MIN aggs over shingle rows; at 128
+  fields the aggregate exceeds ``spark.sql.codegen.maxFields`` and is not
+  whole-stage codegen'd — ROADMAP direction 3);
 - connected components run min-label propagation with pointer doubling:
   O(log diameter) rounds, each edge-linear — no driver-side adjacency
   state;
@@ -30,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hoard_spark.functions import split_words
 from hoard_spark.queries import track_cache
 from hoard_spark.queries.llm import _minhash_bands, shingle_rows_of
 
@@ -237,7 +240,7 @@ def dedup_corpus(
         clusters = cluster_assignments(neardup_pairs(docs, threshold))
     ntok = docs.select(
         "doc_id",
-        F.size(F.split(F.trim("text"), " +")).alias("n_tok"),
+        F.size(split_words()).alias("n_tok"),
     )
     w = Window.partitionBy("cluster_id").orderBy(F.desc("n_tok"), "doc_id")
     ranked = track_cache(

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hoard_spark.functions import split_words
 from hoard_spark.queries import (
     davg,
     dround,
@@ -97,7 +98,7 @@ def shingle_rows_of(
     ``width`` matters at scale: on a CLOSED vocabulary (V words) the
     n-gram domain is V^width, and per-shingle document frequency — the
     quantity whose square bounds every posting/prefix join — is
-    ~corpus_shingles / V^width. tools/bench_heavy_sf1.py measures this
+    ~corpus_shingles / V^width. tools/bench_heavy_sf1.json records this
     directly: at 10x data on the 31-word testdata vocabulary, width 3
     (domain ~30k) lets df grow ∝ N and the prefix join goes quadratic,
     while width 5 (domain ~28.6M) keeps df flat and the slope linear.
@@ -109,7 +110,7 @@ def shingle_rows_of(
     which lets truncation-derived corpora (q98) be pure FILTERS of the
     materialized shingle artifact instead of a re-shingling pass.
     """
-    toks = F.split(F.trim("text"), " +")
+    toks = split_words()
     cnt = F.size(toks) - (width - 1)
     zipped = F.arrays_zip(*[F.slice(toks, 1 + i, cnt) for i in range(width)])
     rows = (
@@ -367,11 +368,14 @@ def _minhash_bands(rows: DataFrame) -> DataFrame:
     MinHash signature: per permutation p, min over shingles of
     xxhash64(shingle, p); banded 4 rows/band for the LSH bucket join.
 
-    Shape: 128 codegen'd MIN aggregates in ONE groupBy over the shingle
-    rows — min-over-shingles commutes with the row explosion, so the
-    values are identical to a per-doc array_min(transform(...)) form,
-    but the work runs vectorized across all cores with map-side partial
-    min instead of as interpreted per-row higher-order functions.
+    Shape: 128 MIN aggregates in ONE groupBy over the shingle rows —
+    min-over-shingles commutes with the row explosion, so the values are
+    identical to a per-doc array_min(transform(...)) form, but the work
+    runs across all cores with map-side partial min instead of as
+    per-row higher-order functions. The 128-field aggregate exceeds
+    ``spark.sql.codegen.maxFields`` (100), so it is NOT whole-stage
+    codegen'd (0 of 2 ``HashAggregate`` nodes in a probe with AQE off);
+    reshaping it is ROADMAP direction 3.
 
     Each shingle STRING is hashed exactly once (``h = xxhash64(s)``);
     the 128 permutations then hash the fixed 8-byte digest
@@ -1584,8 +1588,8 @@ def q100(
     # conformance path): the probe population grows with the corpus
     # (every _ANN_STEP'th vector), so probes x per-probe candidates is
     # ~N^2 BY CONSTRUCTION — capping the probe-source vec_id fixes the
-    # probe-set size so tools/bench_q100_sf10.py can isolate the corpus
-    # axis, exactly the q91 fixed-probe control pattern.
+    # probe-set size so a scaling run (tools/bench_q100_sf10.json) can
+    # isolate the corpus axis, exactly the q91 fixed-probe control pattern.
     probe_src = (F.col("vec_id") < _ANN_OFFSET) & (
         F.col("vec_id") % _ANN_STEP == _RECALL_RES
     )
@@ -2026,7 +2030,7 @@ def q41(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             F.length("text").alias("n_char"),
-            F.size(F.split(F.trim("text"), " +")).alias("n_tok"),
+            F.size(split_words()).alias("n_tok"),
             F.length(
                 F.regexp_replace("text", "[A-Za-z0-9 ]", "")
             ).alias("n_punct"),
@@ -2964,7 +2968,7 @@ def q65(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     toks = load(spark, sf_dir, "documents").select(
         "doc_id",
-        F.posexplode(F.split(F.trim("text"), " +")).alias("pos", "tok"),
+        F.posexplode(split_words()).alias("pos", "tok"),
     )
     w = Window.partitionBy("doc_id").orderBy("pos")
     t2 = F.lead("tok", 2).over(w)
@@ -3161,7 +3165,7 @@ def q67(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters = _neardup_cluster_table(spark, sf_dir)
     ntok = load(spark, sf_dir, "documents").select(
         "doc_id",
-        F.size(F.split(F.trim("text"), " +")).cast("long").alias("n_tok"),
+        F.size(split_words()).cast("long").alias("n_tok"),
     )
     m = clusters.join(ntok, "doc_id")
     w = Window.partitionBy("cluster_id").orderBy(F.desc("n_tok"), "doc_id")
@@ -3239,14 +3243,14 @@ def q68(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     d = docs.select(
         "doc_id",
-        F.size(F.split(F.trim("text"), " +")).cast("long").alias("dl"),
+        F.size(split_words()).cast("long").alias("dl"),
     )
     st = d.agg(
         F.count("*").cast("double").alias("n_docs"),
         (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
     )
     toks = docs.select(
-        "doc_id", F.explode(F.split(F.trim("text"), " +")).alias("word")
+        "doc_id", F.explode(split_words()).alias("word")
     ).where(F.col("word").isin("spark", "merge", "vector"))
     tf = toks.groupBy("doc_id", "word").agg(
         F.count("*").cast("double").alias("tf")
@@ -3326,7 +3330,7 @@ def q71(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     toks = load(spark, sf_dir, "documents").select(
         "doc_id",
-        F.posexplode(F.split(F.trim("text"), " +")).alias("pos", "tok"),
+        F.posexplode(split_words()).alias("pos", "tok"),
     )
     w = Window.partitionBy("doc_id").orderBy("pos")
     bg = (
@@ -3405,7 +3409,7 @@ def q72(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-repetition (q65 covers that)."""
     from pyspark.sql import Window
 
-    toks = F.split(F.trim("text"), " +")
+    toks = split_words()
     zipped = F.arrays_zip(
         *[F.slice(toks, 1 + i, F.size(toks) - 7) for i in range(8)]
     )
@@ -3493,7 +3497,7 @@ def q73(spark: SparkSession, sf_dir: str, context: int = 512) -> DataFrame:
     d = load(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
-        F.size(F.split(F.trim("text"), " +")).cast("long").alias("n_tok"),
+        F.size(split_words()).cast("long").alias("n_tok"),
     )
     w = (
         Window.partitionBy("lang")
@@ -3580,7 +3584,7 @@ def q74(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     toks = load(spark, sf_dir, "documents").select(
-        "doc_id", "lang", F.split(F.trim("text"), " +").alias("toks")
+        "doc_id", "lang", split_words().alias("toks")
     )
     sig = toks.where(F.size("toks") > 0).select(
         "doc_id",
@@ -3795,7 +3799,7 @@ def q90(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sfx = _TOPK_SUFFIX.split()
     docs = load(spark, sf_dir, "documents")
-    toks = F.split(F.trim("text"), " +")
+    toks = split_words()
     m = F.size(toks)
     nonblank = F.length(F.trim("text")) > 0
     boundary = docs.where(F.col("doc_id") % 10 == 0).select(
@@ -4084,7 +4088,7 @@ def q96(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus totals are 1-row broadcast cross joins. Ranking on the
     rounded PMI with the (a, b) tiebreak keeps the top-20 deterministic
     across engines (ln agrees to ~1 ulp)."""
-    toks = F.split(F.trim("text"), " +")
+    toks = split_words()
     docs = spread(load(spark, sf_dir, "documents"))
     zipped = F.arrays_zip(
         F.slice(toks, 1, F.size(toks) - 1),
@@ -4327,7 +4331,7 @@ def q98(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hoard_spark.simjoin import rank_shingle_rows
 
     docs = load(spark, sf_dir, "documents")
-    toks = F.split(F.trim("text"), " +")
+    toks = split_words()
     k = F.greatest(
         F.lit(3), F.ceil(F.lit(0.6) * F.size(toks)).cast("int")
     )

@@ -289,7 +289,7 @@ def _candidate_sets(
     petabyte scale this replaces the full-corpus array shuffle (the
     dominant write) with candidate-proportional work at the price of one
     extra corpus scan; below that regime the default wins (measured,
-    tools/bench_shingle_family.py experiments, round 9)."""
+    tools/bench_shingle_amortization.json, round 9)."""
     if prune:
         cand = track_cache(cand)  # id broadcast + pair join both read it
         ids = (

@@ -66,6 +66,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hoard_spark.fsutil import read_parquet_or_empty
+from hoard_spark.streaming.store import MicroBatchStore
+
 _MODEL_SCHEMA = T.StructType(
     [
         T.StructField("kind", T.StringType()),
@@ -81,7 +84,7 @@ _STATS_SCHEMA = (
 )
 
 
-class AnnIndexStore:
+class AnnIndexStore(MicroBatchStore):
     """Persistent incremental IVF-PQ index. ``process_batch(vecs)`` is a
     ``foreachBatch`` body; ``sink(stream)`` wires it to a streaming
     query; ``search_ivf``/``search_ivf_pq`` run against ``table()``."""
@@ -141,23 +144,13 @@ class AnnIndexStore:
         }
 
     # -- store ------------------------------------------------------------
-    def _read_or_empty(self, path: str, schema) -> DataFrame:
-        from pyspark.errors import AnalysisException
-
-        try:
-            return self.spark.read.schema(schema).parquet(path)
-        except AnalysisException as e:
-            if "PATH_NOT_FOUND" in str(
-                getattr(e, "errorClass", "") or str(e)
-            ):
-                return self.spark.createDataFrame([], schema)
-            raise
-
     def model(self) -> "tuple[list, list] | None":
         """(cents, books) or None before the first batch."""
         if self._model is not None:
             return self._model
-        rows = self._read_or_empty(self.model_path, _MODEL_SCHEMA).collect()
+        rows = read_parquet_or_empty(
+            self.spark, self.model_path, _MODEL_SCHEMA
+        ).collect()
         if not rows:
             return None
         cents = sorted(
@@ -212,8 +205,8 @@ class AnnIndexStore:
     def _table_raw(self) -> DataFrame:
         """Current-version table incl. the admitting-batch column ``b``
         (null on pre-r11 rows) — retrain's trailing sample reads it."""
-        return self._read_or_empty(
-            self._table_path(), self._TABLE_SCHEMA
+        return read_parquet_or_empty(
+            self.spark, self._table_path(), self._TABLE_SCHEMA
         ).dropDuplicates(["vec_id"])
 
     def table(self) -> DataFrame:
@@ -224,8 +217,8 @@ class AnnIndexStore:
         return self._table_raw().select("vec_id", "v", "nrm", "cell", "pq")
 
     def stats(self) -> DataFrame:
-        return self._read_or_empty(
-            self.stats_path, _STATS_SCHEMA
+        return read_parquet_or_empty(
+            self.spark, self.stats_path, _STATS_SCHEMA
         ).dropDuplicates(["batch"])
 
     def drifted_batches(self) -> list[int]:
@@ -350,7 +343,7 @@ class AnnIndexStore:
         # skips the append, so stats() never holds two rows for one batch
         # (ADVICE r10 — dropDuplicates would pick nondeterministically).
         if (
-            self._read_or_empty(self.stats_path, _STATS_SCHEMA)
+            read_parquet_or_empty(self.spark, self.stats_path, _STATS_SCHEMA)
             .where(F.col("batch") == int(batch_id))
             .limit(1)
             .count()
@@ -481,15 +474,3 @@ class AnnIndexStore:
         if len(self.drifted_batches()) < int(min_flagged):
             return None
         return self.retrain(trailing_batches=trailing_batches)
-
-    # -- streaming wiring -------------------------------------------------
-    def sink(self, stream_vecs: DataFrame, checkpoint: str):
-        """writeStream.foreachBatch over ``process_batch``."""
-        return (
-            stream_vecs.writeStream.foreachBatch(
-                lambda b, bid: self.process_batch(b, bid)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )

@@ -71,7 +71,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hoard_spark.fsutil import read_parquet_or_empty
 from hoard_spark.streaming.novelty import gram_hashes
+from hoard_spark.streaming.store import MicroBatchStore
 
 _POST_SCHEMA = T.StructType(
     [
@@ -107,7 +109,7 @@ def ranked_gram_rows(docs: DataFrame, width: int = 3) -> DataFrame:
     )
 
 
-class ContainmentIndex:
+class ContainmentIndex(MicroBatchStore):
     """Persistent posting store + per-batch directed containment joiner.
 
     ``process_batch(docs)`` is directly usable as a ``foreachBatch``
@@ -184,18 +186,6 @@ class ContainmentIndex:
         }
 
     # -- store ------------------------------------------------------------
-    def _read_or_empty(self, path: str, schema) -> DataFrame:
-        from pyspark.errors import AnalysisException
-
-        try:
-            return self.spark.read.schema(schema).parquet(path)
-        except AnalysisException as e:
-            if "PATH_NOT_FOUND" in str(
-                getattr(e, "errorClass", "") or str(e)
-            ):
-                return self.spark.createDataFrame([], schema)
-            raise
-
     def _postings_raw(self) -> DataFrame:
         """The batch-partitioned posting store incl. the ``batch``
         partition column — internal: ``process_batch`` prunes its own
@@ -204,7 +194,7 @@ class ContainmentIndex:
         schema = T.StructType(
             _POST_SCHEMA.fields + [T.StructField("batch", T.IntegerType())]
         )
-        return self._read_or_empty(self.post_path, schema)
+        return read_parquet_or_empty(self.spark, self.post_path, schema)
 
     def postings(self) -> DataFrame:
         """The corpus posting store (g, doc_id, r, n). Duplicate-free by
@@ -214,8 +204,8 @@ class ContainmentIndex:
 
     def pairs(self) -> DataFrame:
         """Emitted directed containment pairs (deduped under replays)."""
-        return self._read_or_empty(
-            self.pair_path, _PAIR_SCHEMA
+        return read_parquet_or_empty(
+            self.spark, self.pair_path, _PAIR_SCHEMA
         ).dropDuplicates(["a_id", "b_id"])
 
     # -- per-batch joiner ---------------------------------------------------
@@ -280,7 +270,8 @@ class ContainmentIndex:
         the append-only guard reads — O(docs ever ingested), one
         overwrite-idempotent ``batch=<id>`` directory per admitting
         batch."""
-        return self._read_or_empty(
+        return read_parquet_or_empty(
+            self.spark,
             self.docfp_path,
             "doc_id long, _c0 long, _x0 long, _s0 decimal(38,0), "
             "batch int",
@@ -295,6 +286,7 @@ class ContainmentIndex:
         across replays — exactly what ``foreachBatch`` provides."""
         rows0 = ranked_gram_rows(docs, width=self.width).persist()
         rows = rows0
+        store = cand = None
         try:
             # Guard the append-only store invariant (ADVICE r9): a doc_id
             # already in the store may only be re-ingested byte-identically
@@ -422,21 +414,6 @@ class ContainmentIndex:
                 "overwrite"
             ).parquet(f"{self.docfp_path}/batch={int(batch_id)}")
         finally:
-            rows0.unpersist()
-            try:
-                store.unpersist()
-                cand.unpersist()
-            except NameError:
-                pass
-
-    # -- streaming wiring -------------------------------------------------
-    def sink(self, stream_docs: DataFrame, checkpoint: str):
-        """writeStream.foreachBatch over ``process_batch``."""
-        return (
-            stream_docs.writeStream.foreachBatch(
-                lambda b, bid: self.process_batch(b, bid)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+            for df in (rows0, store, cand):
+                if df is not None:
+                    df.unpersist()

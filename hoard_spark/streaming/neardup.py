@@ -3,31 +3,21 @@
 The batch near-dup family (q35/q36/q47) answers "which pairs in THIS
 corpus are near-dups"; a training-data ingest pipeline needs the online
 twin: *as documents stream in, which ones duplicate something already
-accepted?* This operator maintains a persistent MinHash signature store
-and, per micro-batch:
+accepted?* ``NearDupIndex`` is the MinHash kind of the banded dedup
+store (``streaming/banded.py``, which owns the store, band join, verify
+and append, and states their measured cost and replay semantics):
 
-1. computes 128-perm MinHash signatures for the batch (the same
-   codegen MIN-aggregate shape as the batch q35 — shingle rows, no
-   arrays, no Python),
-2. derives 32 LSH bands per doc on BOTH the batch and the store and
-   equi-joins on (band_id, band_hash) — candidates only, never a cross
-   product (the store side's band derivation is a codegen projection of
-   the stored signature array, so the store parquet stays one compact
-   row per doc),
-3. verifies candidates by signature agreement — the fraction of equal
-   MinHash positions is an unbiased Jaccard estimate, so
-   ``est_jaccard >= threshold`` needs no re-shingling of old docs (the
-   store never keeps raw text),
-4. emits (new_doc, matched_doc, est_jaccard) matches and appends the
-   batch's signatures to the store.
-
-Scale: the store holds one ~1 KB row per accepted doc (128 longs);
-candidate generation is a bucketed equi-join; per-batch work is linear
-in batch size + candidates. At 100 TB the store is itself a big table —
-partition it by band-prefix or date and let AQE size the join; nothing
-in the shape is quadratic. Semantics are at-least-once under foreachBatch
-replays: signatures are deduped by doc_id at read, and match emission is
-idempotent per (new, matched) pair per batch.
+1. a batch doc's signature is 128 MinHash MIN aggregates over its word
+   3-gram shingle rows — no arrays, no Python. The 128-field aggregate
+   is over ``spark.sql.codegen.maxFields`` (100), so it is NOT
+   whole-stage codegen'd (0 of 2 ``HashAggregate`` nodes in a probe with
+   AQE off); reshaping it is ROADMAP direction 3,
+2. 32 LSH bands of 4 slots each, ``band_hash`` = xxhash64 over the band's
+   slots — a projection of the stored signature array, so the store
+   parquet stays one ~1 KB row (128 longs) per accepted doc,
+3. the fraction of equal MinHash positions is an unbiased Jaccard
+   estimate, so ``est_jaccard >= threshold`` needs no re-shingling of
+   old docs (the store never keeps raw text).
 
 No reference analog (src/hoard.coffee:181-393 is a metrics store with no
 text/dedup surface); declared as round-3 streaming+pipeline extension.
@@ -38,6 +28,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from hoard_spark.functions import split_words
+from hoard_spark.streaming.banded import BandedDupStore
 
 _PERMS = 128
 _BANDS = 32
@@ -62,7 +55,7 @@ def shingle_rows_of(docs: DataFrame, width: int = 3) -> DataFrame:
     ``width`` is the saturated-domain scale knob (the batch family's
     shingle_rows_of doc explains the V^width df argument).
     """
-    toks = F.split(F.trim("text"), " +")
+    toks = split_words()
     cnt = F.size(toks) - (width - 1)
     zipped = F.arrays_zip(*[F.slice(toks, 1 + i, cnt) for i in range(width)])
     return (
@@ -81,10 +74,12 @@ def shingle_rows_of(docs: DataFrame, width: int = 3) -> DataFrame:
 def minhash_signatures(docs: DataFrame) -> DataFrame:
     """(doc_id, text, …) → (doc_id, sig array<long>[128]).
 
-    128 codegen MIN aggregates over the shingle rows, packed into one
-    array column — the storable form of the batch family's signature.
-    Docs with <3 tokens have no shingles and yield no signature (they
-    cannot near-dup by this measure).
+    128 MIN aggregates over the shingle rows, packed into one array
+    column — the storable form of the batch family's signature. At 128
+    fields the aggregate exceeds ``spark.sql.codegen.maxFields`` (100)
+    and runs without whole-stage codegen (ROADMAP direction 3). Docs
+    with <3 tokens have no shingles and yield no signature (they cannot
+    near-dup by this measure).
     """
     rows = shingle_rows_of(docs)
     mins = rows.groupBy("doc_id").agg(
@@ -135,163 +130,25 @@ def _est_jaccard() -> F.Column:
     ).cast("double") / F.lit(float(_PERMS))
 
 
-class NearDupIndex:
+class NearDupIndex(BandedDupStore):
     """Persistent MinHash signature store + per-batch incremental matcher.
 
-    ``process_batch(docs)`` is directly usable as a ``foreachBatch``
-    body; ``sink(stream)`` wires it to a streaming query.
+    ``process_batch(docs)`` over (doc_id, text) is directly usable as a
+    ``foreachBatch`` body; ``sink(stream)`` wires it to a streaming query.
     """
+
+    id_col = "doc_id"
+    sig_schema = _SIG_SCHEMA
+    band_key = "band_hash"
+    est_col = "est_jaccard"
 
     def __init__(
         self, spark: SparkSession, path: str, threshold: float = 0.7
     ):
-        self.spark = spark
-        self.path = path.rstrip("/")
-        self.threshold = threshold
-        self.sig_path = f"{self.path}/signatures"
-        self.match_path = f"{self.path}/matches"
-        from hoard_spark.streaming.compact import recover
+        super().__init__(spark, path, threshold)
 
-        for root in (self.sig_path, self.match_path):
-            recover(spark, root)
+    def _signatures(self, docs: DataFrame) -> DataFrame:
+        return minhash_signatures(docs)
 
-    def compact(self, target_files: int = 32) -> dict:
-        """Consolidate the per-batch appended files (tasks x batches
-        growth) — row-multiset identical, crash-safe via the manifest
-        protocol in streaming.compact. Run between batches."""
-        from hoard_spark.streaming.compact import compact_flat
-
-        return {
-            "signatures": compact_flat(
-                self.spark, self.sig_path, _SIG_SCHEMA, target_files
-            ),
-            "matches": compact_flat(
-                self.spark,
-                self.match_path,
-                "new_id long, matched_id long, est_jaccard double, "
-                "batch long",
-                target_files,
-            ),
-        }
-
-    # -- store ------------------------------------------------------------
-    def signatures(self) -> DataFrame:
-        """The accepted-doc signature store (deduped by doc_id — replays
-        under at-least-once foreachBatch append duplicates rows, never
-        wrong signatures, so any winner per doc_id is correct)."""
-        from pyspark.errors import AnalysisException
-
-        try:
-            raw = self.spark.read.schema(_SIG_SCHEMA).parquet(self.sig_path)
-        except AnalysisException as e:
-            if "PATH_NOT_FOUND" in str(
-                getattr(e, "errorClass", "") or str(e)
-            ):
-                return self.spark.createDataFrame([], _SIG_SCHEMA)
-            raise
-        return raw.groupBy("doc_id").agg(F.min("sig").alias("sig"))
-
-    def matches(self) -> DataFrame:
-        from pyspark.errors import AnalysisException
-
-        schema = (
-            "new_id long, matched_id long, est_jaccard double, batch long"
-        )
-        try:
-            return (
-                self.spark.read.schema(schema)
-                .parquet(self.match_path)
-                .dropDuplicates(["new_id", "matched_id"])
-            )
-        except AnalysisException as e:
-            if "PATH_NOT_FOUND" in str(
-                getattr(e, "errorClass", "") or str(e)
-            ):
-                return self.spark.createDataFrame([], schema)
-            raise
-
-    # -- per-batch matcher ------------------------------------------------
-    def process_batch(self, docs: DataFrame, batch_id: int = 0) -> None:
-        """Match ``docs`` (doc_id, text) against the store AND within the
-        batch, persist matches, then admit the batch's signatures."""
-        new_sigs = minhash_signatures(docs).persist()
-        try:
-            # a replayed batch must see the store as it was BEFORE the
-            # batch was admitted — else replay emits the symmetric twin
-            # of every within-batch pair (batch doc vs its stored copy)
-            store = (
-                self.signatures()
-                .join(new_sigs.select("doc_id"), "doc_id", "left_anti")
-                .persist()
-            )
-            nb = bands_of(new_sigs)
-            sb = bands_of(store)
-
-            def _pairs(left_bands, right_bands, strict):
-                a = left_bands.select(
-                    F.col("doc_id").alias("new_id"), "band_id", "band_hash"
-                )
-                b = right_bands.select(
-                    F.col("doc_id").alias("matched_id"),
-                    "band_id",
-                    "band_hash",
-                )
-                cond = (
-                    (F.col("new_id") > F.col("matched_id"))
-                    if strict
-                    else (F.col("new_id") != F.col("matched_id"))
-                )
-                return (
-                    a.join(b, ["band_id", "band_hash"])
-                    .where(cond)
-                    .select("new_id", "matched_id")
-                    .distinct()
-                )
-
-            # new-vs-store: any collision counts; new-vs-new: dedupe the
-            # symmetric pair with > (higher id is "the duplicate")
-            cands = _pairs(nb, sb, strict=False).unionByName(
-                _pairs(nb, nb, strict=True)
-            )
-            sa = new_sigs.select(
-                F.col("doc_id").alias("new_id"), F.col("sig").alias("sig_a")
-            )
-            all_sigs = store.unionByName(new_sigs).groupBy("doc_id").agg(
-                F.min("sig").alias("sig")
-            )
-            sb2 = all_sigs.select(
-                F.col("doc_id").alias("matched_id"),
-                F.col("sig").alias("sig_b"),
-            )
-            out = (
-                cands.join(sa, "new_id")
-                .join(sb2, "matched_id")
-                .withColumn("est_jaccard", _est_jaccard())
-                .where(F.col("est_jaccard") >= self.threshold)
-                .select(
-                    "new_id",
-                    "matched_id",
-                    F.round("est_jaccard", 4).alias("est_jaccard"),
-                    F.lit(batch_id).cast("long").alias("batch"),
-                )
-            )
-            out.write.mode("append").parquet(self.match_path)
-            new_sigs.write.mode("append").parquet(self.sig_path)
-        finally:
-            new_sigs.unpersist()
-            try:
-                store.unpersist()
-            except NameError:
-                pass
-
-    # -- streaming wiring -------------------------------------------------
-    def sink(self, stream_docs: DataFrame, checkpoint: str):
-        """writeStream.foreachBatch over ``process_batch``."""
-        return (
-            stream_docs.writeStream.foreachBatch(
-                lambda b, bid: self.process_batch(b, bid)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+    _bands = staticmethod(bands_of)
+    _estimate = staticmethod(_est_jaccard)

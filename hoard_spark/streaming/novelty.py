@@ -43,7 +43,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hoard_spark.fsutil import read_parquet_or_empty
 from hoard_spark.streaming.neardup import shingle_rows_of
+from hoard_spark.streaming.store import MicroBatchStore
 
 _GRAM_SEED = 95  # fixed hash seed — the store key must be stable forever
 
@@ -73,7 +75,7 @@ def gram_hashes(docs: DataFrame, width: int = 3) -> DataFrame:
     )
 
 
-class NoveltyIndex:
+class NoveltyIndex(MicroBatchStore):
     """Persistent seen-gram store + per-batch novelty scorer.
 
     ``process_batch(docs)`` is directly usable as a ``foreachBatch``
@@ -106,31 +108,19 @@ class NoveltyIndex:
         }
 
     # -- store ------------------------------------------------------------
-    def _read_or_empty(self, path: str, schema) -> DataFrame:
-        from pyspark.errors import AnalysisException
-
-        try:
-            return self.spark.read.schema(schema).parquet(path)
-        except AnalysisException as e:
-            if "PATH_NOT_FOUND" in str(
-                getattr(e, "errorClass", "") or str(e)
-            ):
-                return self.spark.createDataFrame([], schema)
-            raise
-
     def grams(self) -> DataFrame:
         """The seen-gram store. Replayed appends duplicate rows but never
         change a gram's hash, so any winner per gram is correct."""
         return (
-            self._read_or_empty(self.gram_path, _GRAM_SCHEMA)
+            read_parquet_or_empty(self.spark, self.gram_path, _GRAM_SCHEMA)
             .groupBy("g")
             .agg(F.min("doc_id").alias("doc_id"))
         )
 
     def scores(self) -> DataFrame:
         """Per-doc novelty scores (deduped by doc_id under replays)."""
-        return self._read_or_empty(
-            self.score_path, _SCORE_SCHEMA
+        return read_parquet_or_empty(
+            self.spark, self.score_path, _SCORE_SCHEMA
         ).dropDuplicates(["doc_id"])
 
     # -- per-batch scorer ---------------------------------------------------
@@ -143,6 +133,7 @@ class NoveltyIndex:
         from hoard_spark.queries import dround
 
         rows = gram_hashes(docs).persist()
+        store = None
         try:
             # a replayed batch must see the store as it was BEFORE its own
             # earlier attempt admitted grams — store rows carry the
@@ -198,19 +189,5 @@ class NoveltyIndex:
             )
         finally:
             rows.unpersist()
-            try:
+            if store is not None:
                 store.unpersist()
-            except NameError:
-                pass
-
-    # -- streaming wiring -------------------------------------------------
-    def sink(self, stream_docs: DataFrame, checkpoint: str):
-        """writeStream.foreachBatch over ``process_batch``."""
-        return (
-            stream_docs.writeStream.foreachBatch(
-                lambda b, bid: self.process_batch(b, bid)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )

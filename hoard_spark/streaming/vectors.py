@@ -3,19 +3,20 @@
 The batch ANN family (q38/q39/q47/q91/q93) answers "which vectors in
 THIS corpus are near-dups / neighbors"; an embedding ingest pipeline
 needs the online twin: *as embedded content streams in, which items
-duplicate something already accepted?* The vector analog of the MinHash
-document matcher (``streaming/neardup.py``), with the same store/band/
-verify architecture:
+duplicate something already accepted?* ``VectorDupIndex`` is the
+hyperplane kind of the banded dedup store (``streaming/banded.py``,
+which owns the store, band join, verify and append, and states their
+measured cost and replay semantics; the MinHash kind is
+``streaming/neardup.py``):
 
 1. each batch vector gets a 64-bit random-hyperplane (SimHash)
    signature — one codegen projection over literal md5-derived
    hyperplanes (``hoard_spark.ann.hyperplanes`` / ``lsh_signature``);
    the store keeps ONE 16-byte row (vec_id, sig) per accepted vector,
    never the raw embedding,
-2. candidates meet through an 8-band x 8-bit equi-join on both the
-   batch and the store (band extraction is a mask projection of the
-   stored long — `(sig >> 8k) & 255`; the arithmetic shift's sign fill
-   is masked off, so bit 63 is safe),
+2. candidates meet through 8 bands x 8 bits (band extraction is a mask
+   projection of the stored long — `(sig >> 8k) & 255`; the arithmetic
+   shift's sign fill is masked off, so bit 63 is safe),
 3. verification needs no raw vectors: the fraction of agreeing
    signature bits estimates the angle (Charikar, STOC 2002:
    P[bit agrees] = 1 - theta/pi), so
@@ -23,20 +24,11 @@ verify architecture:
    ``bit_count(sig_a ^ sig_b)`` — the exact analog of estimating
    Jaccard from MinHash agreement. An exact clone has a bit-identical
    signature: agree = 1, est_cos = 1.0 exactly.
-4. matches (new_id, matched_id, est_cos) append per batch; the batch's
-   signatures are then admitted to the store.
 
-Scale: the store is 16 bytes per accepted vector — 10^9 vectors = 16 GB
-of parquet, a broadcast-or-bucketed join either way; candidate
-generation is a banded equi-join, never all-pairs; per-batch work is
-linear in batch size + candidates. With 64 bits the estimator's s.e. is
-~sqrt(p(1-p)/64) ≈ 0.04 around p = 0.9 — coarse but exactly what dup
-detection needs (the decision boundary sits at near-dup similarity, not
-at weak-similarity kNN, which stays with the IVF paths — see
-``ann.search_lsh``'s positioning note). Semantics are at-least-once
-under foreachBatch replays: signatures dedupe by vec_id at read, match
-emission dedupes per (new, matched) pair at read, and a replayed batch
-anti-joins itself out of the store view before matching.
+With 64 bits the estimator's s.e. is ~sqrt(p(1-p)/64) ≈ 0.04 around
+p = 0.9 — coarse but exactly what dup detection needs (the decision
+boundary sits at near-dup similarity, not at weak-similarity kNN, which
+stays with the IVF paths — see ``ann.search_lsh``'s positioning note).
 
 No reference analog (src/hoard.coffee is a metrics store); declared as
 a round-8 streaming extension of the ANN family.
@@ -51,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from hoard_spark.ann import hyperplanes, lsh_signature
+from hoard_spark.streaming.banded import BandedDupStore
 
 _H = 64
 _BANDS = 8
@@ -106,10 +99,16 @@ def _est_cos() -> F.Column:
     return F.cos(F.lit(math.pi) * (F.lit(1.0) - agree))
 
 
-class VectorDupIndex:
+class VectorDupIndex(BandedDupStore):
     """Persistent hyperplane signature store + per-batch matcher for
-    embedding streams. ``process_batch(vecs)`` is a ``foreachBatch``
-    body; ``sink(stream)`` wires it to a streaming query."""
+    embedding streams. ``process_batch(vecs)`` over (vec_id, embedding)
+    is a ``foreachBatch`` body; ``sink(stream)`` wires it to a streaming
+    query."""
+
+    id_col = "vec_id"
+    sig_schema = _SIG_SCHEMA
+    band_key = "band_val"
+    est_col = "est_cos"
 
     def __init__(
         self,
@@ -119,153 +118,12 @@ class VectorDupIndex:
         threshold: float = 0.92,
         seed: int = 7,
     ):
-        self.spark = spark
-        self.path = path.rstrip("/")
         self.dim = dim
-        self.threshold = threshold
         self.seed = seed
-        self.sig_path = f"{self.path}/signatures"
-        self.match_path = f"{self.path}/matches"
-        from hoard_spark.streaming.compact import recover
+        super().__init__(spark, path, threshold)
 
-        for root in (self.sig_path, self.match_path):
-            recover(spark, root)
+    def _signatures(self, vecs: DataFrame) -> DataFrame:
+        return vector_signatures(vecs, self.dim, seed=self.seed)
 
-    def compact(self, target_files: int = 32) -> dict:
-        """Consolidate the per-batch appended files (tasks x batches
-        growth) — row-multiset identical, crash-safe via the manifest
-        protocol in streaming.compact. Run between batches."""
-        from hoard_spark.streaming.compact import compact_flat
-
-        return {
-            "signatures": compact_flat(
-                self.spark, self.sig_path, _SIG_SCHEMA, target_files
-            ),
-            "matches": compact_flat(
-                self.spark,
-                self.match_path,
-                "new_id long, matched_id long, est_cos double, batch long",
-                target_files,
-            ),
-        }
-
-    # -- store ------------------------------------------------------------
-    def signatures(self) -> DataFrame:
-        """The accepted-vector signature store (deduped by vec_id —
-        replayed appends duplicate rows, never wrong signatures)."""
-        from pyspark.errors import AnalysisException
-
-        try:
-            raw = self.spark.read.schema(_SIG_SCHEMA).parquet(self.sig_path)
-        except AnalysisException as e:
-            if "PATH_NOT_FOUND" in str(
-                getattr(e, "errorClass", "") or str(e)
-            ):
-                return self.spark.createDataFrame([], _SIG_SCHEMA)
-            raise
-        return raw.groupBy("vec_id").agg(F.min("sig").alias("sig"))
-
-    def matches(self) -> DataFrame:
-        from pyspark.errors import AnalysisException
-
-        schema = "new_id long, matched_id long, est_cos double, batch long"
-        try:
-            return (
-                self.spark.read.schema(schema)
-                .parquet(self.match_path)
-                .dropDuplicates(["new_id", "matched_id"])
-            )
-        except AnalysisException as e:
-            if "PATH_NOT_FOUND" in str(
-                getattr(e, "errorClass", "") or str(e)
-            ):
-                return self.spark.createDataFrame([], schema)
-            raise
-
-    # -- per-batch matcher ------------------------------------------------
-    def process_batch(self, vecs: DataFrame, batch_id: int = 0) -> None:
-        """Match ``vecs`` (vec_id, embedding) against the store AND
-        within the batch, persist matches, then admit the batch."""
-        new_sigs = vector_signatures(
-            vecs, self.dim, seed=self.seed
-        ).persist()
-        try:
-            # replay safety: a replayed batch must see the store as it
-            # was BEFORE the batch was admitted
-            store = (
-                self.signatures()
-                .join(new_sigs.select("vec_id"), "vec_id", "left_anti")
-                .persist()
-            )
-            nb = bands_of(new_sigs)
-            sb = bands_of(store)
-
-            def _pairs(left, right, strict):
-                a = left.select(
-                    F.col("vec_id").alias("new_id"), "band_id", "band_val"
-                )
-                b = right.select(
-                    F.col("vec_id").alias("matched_id"),
-                    "band_id",
-                    "band_val",
-                )
-                cond = (
-                    (F.col("new_id") > F.col("matched_id"))
-                    if strict
-                    else (F.col("new_id") != F.col("matched_id"))
-                )
-                return (
-                    a.join(b, ["band_id", "band_val"])
-                    .where(cond)
-                    .select("new_id", "matched_id")
-                    .distinct()
-                )
-
-            cands = _pairs(nb, sb, strict=False).unionByName(
-                _pairs(nb, nb, strict=True)
-            )
-            sa = new_sigs.select(
-                F.col("vec_id").alias("new_id"),
-                F.col("sig").alias("sig_a"),
-            )
-            all_sigs = (
-                store.unionByName(new_sigs)
-                .groupBy("vec_id")
-                .agg(F.min("sig").alias("sig"))
-            )
-            sb2 = all_sigs.select(
-                F.col("vec_id").alias("matched_id"),
-                F.col("sig").alias("sig_b"),
-            )
-            out = (
-                cands.join(sa, "new_id")
-                .join(sb2, "matched_id")
-                .withColumn("est_cos", _est_cos())
-                .where(F.col("est_cos") >= self.threshold)
-                .select(
-                    "new_id",
-                    "matched_id",
-                    F.round("est_cos", 4).alias("est_cos"),
-                    F.lit(batch_id).cast("long").alias("batch"),
-                )
-            )
-            out.write.mode("append").parquet(self.match_path)
-            new_sigs.write.mode("append").parquet(self.sig_path)
-        finally:
-            new_sigs.unpersist()
-            try:
-                store.unpersist()
-            except NameError:
-                pass
-
-    # -- streaming wiring -------------------------------------------------
-    def sink(self, stream_vecs: DataFrame, checkpoint: str):
-        """writeStream.foreachBatch over ``process_batch``."""
-        return (
-            stream_vecs.writeStream.foreachBatch(
-                lambda b, bid: self.process_batch(b, bid)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+    _bands = staticmethod(bands_of)
+    _estimate = staticmethod(_est_cos)

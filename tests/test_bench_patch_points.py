@@ -57,3 +57,60 @@ def test_forced_spark_fetches_pass_the_traced_fetch_spans(engine, monkeypatch):
         calls.clear()
         fetch()
         assert sorted(calls) == ["collect_values", "fetch_df"]
+
+
+class _CountingTracer:
+    """Puts a call counter, instead of a span, at each patch point."""
+
+    def __init__(self, monkeypatch):
+        self.monkeypatch = monkeypatch
+        self.calls = []
+
+    def patch(self, owner, attr, name, wrap=None):
+        real = getattr(owner, attr)
+
+        def counted(*a, **kw):
+            self.calls.append(name)
+            return real(*a, **kw)
+
+        self.monkeypatch.setattr(owner, attr, counted)
+
+
+def test_store_batches_and_compactions_pass_the_traced_stream_spans(
+    spark, tmp_path, monkeypatch
+):
+    """The ``llm`` phase patches ``process_batch`` and ``compact`` on each
+    dedup store class, in that order, and ``compact_flat`` on
+    ``hoard_spark.streaming.compact``. A batch must fire its own store's
+    span only — the two classes are siblings, so neither's spans nest in
+    the other's — and a compaction must reach ``compact_flat`` through
+    that module, or the spans read 0 silently."""
+    from hoard_spark.streaming.neardup import NearDupIndex
+    from hoard_spark.streaming.vectors import VectorDupIndex
+    from perfbench import stream
+
+    assert not issubclass(NearDupIndex, VectorDupIndex)
+    assert not issubclass(VectorDupIndex, NearDupIndex)
+    tracer = _CountingTracer(monkeypatch)
+    stream._install(tracer)
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c d e")], "doc_id long, text string"
+    )
+    vecs = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.5, 0.2]), (2, [1.0, 0.0, 0.5, 0.2])],
+        "vec_id long, embedding array<double>",
+    )
+    runs = [
+        ("neardup", NearDupIndex(spark, str(tmp_path / "nd")), docs),
+        ("vectors", VectorDupIndex(spark, str(tmp_path / "vd"), dim=4), vecs),
+    ]
+    for name, store, batch in runs:
+        tracer.calls.clear()
+        store.process_batch(batch, 0)
+        assert tracer.calls == [f"stream.{name}"]
+        assert store.matches().count() == 1
+        tracer.calls.clear()
+        store.compact()
+        assert tracer.calls == ["stream.compact"] + 2 * [
+            "stream.compact_files"
+        ]

@@ -8,6 +8,8 @@ its manifest by the next store construction (or explicit ``recover``),
 never leaving missing or duplicated rows behind.
 """
 
+import collections
+import hashlib
 import json
 import os
 
@@ -21,7 +23,9 @@ from hoard_spark.streaming.compact import (
     store_file_count,
 )
 from hoard_spark.streaming.containment import ContainmentIndex
+from hoard_spark.streaming.neardup import NearDupIndex
 from hoard_spark.streaming.novelty import NoveltyIndex
+from hoard_spark.streaming.vectors import VectorDupIndex
 
 
 def _docs(spark, lo: int, hi: int, seed: str = "s"):
@@ -145,6 +149,71 @@ def test_novelty_compact_preserves_rows(spark, tmp_path):
     b.process_batch(nxt, 3)
     assert {tuple(r) for r in a.scores().collect()} == {
         tuple(r) for r in b.scores().collect()
+    }
+
+
+def _text(src: int) -> str:
+    return " ".join(f"s{src}w{j}" for j in range(20))
+
+
+def _vec(src: int) -> list:
+    """md5-derived, so distinct sources are uncorrelated."""
+    return [
+        int.from_bytes(hashlib.md5(f"{src}:{j}".encode()).digest()[:4], "big")
+        / float(1 << 31)
+        - 1.0
+        for j in range(16)
+    ]
+
+
+def _dedup_store(spark, kind: str, path: str):
+    """(store, batch builder) for one banded dedup store; the builder
+    maps (id, src) items to rows, and items sharing ``src`` are clones."""
+    if kind == "neardup":
+        idx = NearDupIndex(spark, path, threshold=0.7)
+        content, schema = _text, "doc_id long, text string"
+    else:
+        idx = VectorDupIndex(spark, path, dim=16, threshold=0.92)
+        content, schema = _vec, "vec_id long, embedding array<double>"
+    return idx, lambda items: spark.createDataFrame(
+        [(i, content(src)) for i, src in items], schema
+    )
+
+
+def _multiset(df):
+    return collections.Counter(
+        tuple(tuple(v) if isinstance(v, list) else v for v in r)
+        for r in df.collect()
+    )
+
+
+@pytest.mark.parametrize("kind", ["neardup", "vectors"])
+def test_dedup_store_compact_preserves_rows_and_next_match(
+    spark, tmp_path, kind
+):
+    """Three batches (each after the first plants a clone of an earlier
+    item), then ``compact``: the signature and match multisets are
+    unchanged, the store holds fewer files, and a fourth batch still
+    emits its planted clone."""
+    idx, rows = _dedup_store(spark, kind, str(tmp_path / kind))
+    for b in range(3):
+        clone = [(10 * b + 8, 10 * (b - 1))] if b else []
+        idx.process_batch(
+            rows([(i, i) for i in range(10 * b, 10 * b + 8)] + clone), b
+        )
+    sigs, matches = _multiset(idx.signatures()), _multiset(idx.matches())
+    assert {(r[0], r[1]) for r in matches} == {(18, 0), (28, 10)}
+    files_before = store_file_count(spark, idx.path)
+
+    idx.compact(target_files=2)
+    assert _multiset(idx.signatures()) == sigs
+    assert _multiset(idx.matches()) == matches
+    assert store_file_count(spark, idx.path) < files_before
+
+    idx.process_batch(rows([(30, 30), (38, 20)]), 3)
+    assert (38, 20, 3) in {
+        (r["new_id"], r["matched_id"], r["batch"])
+        for r in idx.matches().collect()
     }
 
 

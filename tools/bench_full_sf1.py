@@ -13,8 +13,8 @@ Usage: python tools/bench_full_sf1.py [--only qNN_name ...]
 (regenerates the corpus if absent). Writes tools/bench_full_sf1.json.
 ``--only`` re-measures just the named queries and merges them into the
 committed artifact (refresh REPLACES the prior entry — same discipline
-as bench_full_sf10.py's targeted mode), so a layout/plan change can
-refresh the rows it touched without a full re-run.
+as the sf10 run's targeted mode, tools/bench_full_sf10.json), so a
+layout/plan change can refresh the rows it touched without a full re-run.
 """
 
 from __future__ import annotations
@@ -120,7 +120,7 @@ def main() -> None:
     if only and path.exists():
         # targeted refresh: merge into the committed artifact; refreshed
         # entries REPLACE priors so a change's new wall is recorded even
-        # when slower (mirrors bench_full_sf10.py)
+        # when slower (as the sf10 run did, tools/bench_full_sf10.json)
         prior = json.loads(path.read_text())
         merged = dict(prior.get("queries", {}))
         merged.update(timings)
