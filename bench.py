@@ -118,15 +118,15 @@ def sf_of(path: str) -> float:
     return float(m.group(1)) if m else -1.0
 
 
-def main() -> None:
+def suite_session(app_name: str = "hoard-spark-bench"):
+    """The query suite's session: ``local[$SPARK_GRAFT_CPUS]`` with AQE.
+    ``tools/bench_queries.py`` and ``tools/capture_plans.py`` build it
+    here too, so their timings and plans are the suite's."""
     from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
-
-    from hoard_spark.queries import all_queries, release_caches
 
     spark = (
         SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("hoard-spark-bench")
+        .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(CPUS))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -140,6 +140,15 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def main() -> None:
+    from pyspark.sql import functions as F
+
+    from hoard_spark.queries import all_queries, release_caches
+
+    spark = suite_session()
 
     registry = all_queries()
 

@@ -14,7 +14,8 @@ Writes take one of two routes. The Spark route is one write core
 (``_ingest_prepared``) for every batch: a stream micro-batch, an
 ``ingest_df`` (its one-metric case) and an ``update_many`` flush too big
 for the driver all append their aligned rows beside a rollup recompute
-scoped to the partitions the batch touched. A small ``update_many`` flush
+scoped, inside the plan, to the partitions the batch touched; the driver
+collects only the batch's (metric, tier) spans. A small ``update_many`` flush
 (its fold and cascade reading at most ``fetch_driver_max_files`` files)
 is written on the driver with no Spark job: each touched points partition
 is rewritten as one LWW-folded file and each touched rollup partition is
@@ -131,7 +132,6 @@ class HoardEngine:
         warehouse_dir: str,
         metric_buckets: int | None = None,
         fetch_driver_max_files: int = 32,
-        propagate_touched_cap: int = 100_000,
     ):
         """``metric_buckets``: opt-in hash-bucketed layout for very-high-
         cardinality metric spaces. With N buckets the partition scheme is
@@ -148,21 +148,10 @@ class HoardEngine:
         partition list is at most this many parquet files, and an
         ``update_many()`` flush whose fold and rollup cascade read or
         replace at most this many. 0 forces the Spark path for both.
-
-        ``propagate_touched_cap``: the rollup cascade scopes its recompute
-        to the exact (metric, date) pairs a batch touched, which needs one
-        driver-side ``distinct().collect()``. For streaming micro-batches
-        that list is tiny (metrics x days-per-batch), but a multi-year x
-        100k-metric BACKFILL would pull millions of pairs through the
-        driver — above this cap the engine skips the list entirely and
-        recomputes each cascade tier over the batch's min/max bucket range
-        as a scan predicate instead (value-equal; pinned by
-        tests/test_propagate_scale.py). 0 disables the capped path.
         """
         self.spark = spark
         self.warehouse_dir = warehouse_dir
         self.fetch_driver_max_files = fetch_driver_max_files
-        self.propagate_touched_cap = propagate_touched_cap
         self.fs = WarehouseFS(spark)  # data plane: works on file://, HDFS, S3
         # Control plane (catalog/seq/layout JSON) is driver-local plain
         # I/O by design; normalize local file: URI forms to the OS path
@@ -592,24 +581,35 @@ class HoardEngine:
         ``prepared`` is ``prepare_batch_multi`` output over
         ``policy_dim(by_sig)`` (plus ``mb`` when bucketed): ``_sig``
         indexes ``by_sig``, one ``(MetricInfo, [metric, ...])`` entry per
-        retention-policy signature. ONE job fills the cache and collects,
-        for every policy group at once, the metrics present and the rollup
-        partitions touched (``_collect_touched``). Then, under the writer
-        lock, ONE catalog write (``touch_many``) and the points append
-        running CONCURRENTLY with one multi-metric cascade per policy
-        group: both are pure readers of the cache, and the LWW collapse
-        makes any interleaving of their disk visibility idempotent. Total:
-        2 + O(tiers) jobs per batch, independent of metric AND policy
-        count, with the append hidden under the cascade's wall-clock.
+        retention-policy signature. ONE collect fills the cache and
+        returns the (min, max) ``bucket_ts`` of every (policy, metric,
+        tier) the batch holds — at most metrics x tiers rows, never
+        metrics x days: the metrics present and each cascade's spans.
+        Then, under the writer lock, ONE catalog write (``touch_many``)
+        and the points append running CONCURRENTLY with one multi-metric
+        cascade per policy group: both are pure readers of the cache, and
+        the LWW collapse makes any interleaving of their disk visibility
+        idempotent. The job count does not grow with the metric count: a
+        32-metric batch of one 3-tier policy (the ``tsdb`` benchmark's
+        backfill, local[4]) runs 17 jobs — 4 for the collect's AQE
+        stages, 2 for the append and 11 for the two cascade tiers.
         """
         prepared = prepared.cache()
         try:
-            present, touched = self._collect_touched(prepared, by_sig)
-            if not present:
+            spans: dict[int, dict[tuple[str, int], tuple[int, int]]] = {}
+            for r in (
+                prepared.groupBy("_sig", "metric", "tier")
+                .agg(F.min("bucket_ts").alias("lo"), F.max("bucket_ts").alias("hi"))
+                .collect()
+            ):
+                spans.setdefault(r["_sig"], {})[(r["metric"], r["tier"])] = (
+                    r["lo"], r["hi"],
+                )
+            if not spans:
                 return
             with self._writer_lock():
                 self.catalog.touch_many(
-                    sorted(set().union(*present.values())), now
+                    sorted({m for s in spans.values() for m, _ in s}), now
                 )
                 err: list[BaseException] = []
 
@@ -631,92 +631,22 @@ class HoardEngine:
                 writer.start()
                 try:
                     for sid, (info, _) in enumerate(by_sig):
-                        mets = sorted(present.get(sid, ()))
-                        if not propagate or not mets or len(info.archives) <= 1:
+                        if not propagate or sid not in spans or len(info.archives) <= 1:
                             continue
                         # The cascade's tier views take the batch from
-                        # memory (``pending``); a racing append's rows that
-                        # a scan sees on disk collapse in LWW. touched is
-                        # None when the batch blew the touched-pair cap:
-                        # ``batch`` then scopes each tier by date range.
-                        rows = prepared.where(F.col("_sig") == sid)
-                        if touched is None:
-                            self.propagate_many(mets, batch=rows, pending=rows)
-                        else:
-                            self.propagate_many(
-                                mets, pending=rows, touched_by_tier=touched[sid]
-                            )
+                        # memory; a racing append's rows that a scan sees
+                        # on disk collapse in LWW.
+                        self.propagate_many(
+                            sorted({m for m, _ in spans[sid]}),
+                            batch=prepared.where(F.col("_sig") == sid),
+                            spans=spans[sid],
+                        )
                 finally:
                     writer.join()
                 if err:
                     raise err[0]
         finally:
             prepared.unpersist()
-
-    def _collect_touched(
-        self,
-        prepared: DataFrame,
-        by_sig: list[tuple[MetricInfo, list[str]]],
-    ) -> tuple[dict[int, set], dict[int, dict[int, set]] | None]:
-        """One distinct job over the prepared cache: per policy group, the
-        metrics present and the (metric, coarse-bucket date) pairs per
-        cascade tier (the generalized ``_.uniq`` propagate-target dedup,
-        src/hoard.coffee:373-378). Single-archive groups contribute a
-        presence-only arm (``tk = 0``) so ``touch_many`` still sees them.
-
-        Steady-state batches touch (metrics x days-per-batch) pairs — tiny
-        — but a backfill replaying years of history would pull a huge list
-        through the driver. Above ``propagate_touched_cap`` pairs this
-        returns ``touched = None`` with only the present-metric set
-        (bounded by the metric universe); the cascade then scopes each tier
-        by the batch's date range instead."""
-        frames = []
-        for sid, (info, _) in enumerate(by_sig):
-            base = prepared.where(F.col("_sig") == sid)
-            cascade = plan_cascade(info)
-            if not cascade:
-                frames.append(
-                    base.select(
-                        F.lit(sid).alias("sid"),
-                        F.lit(0).alias("tk"),
-                        "metric",
-                        F.to_date(F.lit("1970-01-01")).alias("d"),
-                    )
-                )
-                continue
-            for tier_k, _, lower_spp in cascade:
-                frames.append(
-                    base.where(F.col("tier") <= tier_k).select(
-                        F.lit(sid).alias("sid"),
-                        F.lit(tier_k).alias("tk"),
-                        "metric",
-                        bucket_date_col(
-                            F.col("bucket_ts")
-                            - F.pmod(F.col("bucket_ts"), F.lit(lower_spp))
-                        ).alias("d"),
-                    )
-                )
-        un = frames[0]
-        for f in frames[1:]:
-            un = un.unionByName(f)
-        cap = self.propagate_touched_cap
-        rows = (
-            un.distinct().limit(cap + 1).collect()
-            if cap > 0
-            else un.distinct().collect()
-        )
-        present: dict[int, set] = {}
-        if cap > 0 and len(rows) > cap:
-            for r in prepared.select("_sig", "metric").distinct().collect():
-                present.setdefault(r["_sig"], set()).add(r["metric"])
-            return present, None
-        touched: dict[int, dict[int, set]] = {}
-        for r in rows:
-            present.setdefault(r["sid"], set()).add(r["metric"])
-            touched.setdefault(r["sid"], {}).setdefault(r["tk"], set()).add(
-                (r["metric"], str(r["d"]))
-            )
-        return present, touched
 
     # ------------------------------------------------------------- reading
     def _read_schema(self, base: T.StructType) -> T.StructType:
@@ -726,22 +656,14 @@ class HoardEngine:
             list(base.fields) + [T.StructField("mb", T.IntegerType())]
         )
 
-    def _read_parquet_root(self, path: str, schema: T.StructType) -> DataFrame:
-        """Read a warehouse root; only an absent root reads as empty
-        (``fsutil.read_parquet_or_empty`` — a corrupted warehouse answering
-        every fetch with gaps is a wrong answer, not an empty one)."""
-        if not self.fs.isdir(path):
-            return self.spark.createDataFrame([], schema)
-        return read_parquet_or_empty(self.spark, path, schema)
-
     def _read_points(self) -> DataFrame:
-        return self._read_parquet_root(
-            self.points_path, self._read_schema(_POINTS_READ_SCHEMA)
+        return read_parquet_or_empty(
+            self.spark, self.points_path, self._read_schema(_POINTS_READ_SCHEMA)
         )
 
     def _read_rollups(self) -> DataFrame:
-        return self._read_parquet_root(
-            self.rollups_path, self._read_schema(_ROLLUP_READ_SCHEMA)
+        return read_parquet_or_empty(
+            self.spark, self.rollups_path, self._read_schema(_ROLLUP_READ_SCHEMA)
         )
 
     @staticmethod
@@ -886,134 +808,78 @@ class HoardEngine:
             out = out.unionByName(p)
         return out
 
-    def propagate(
-        self,
-        metric: str,
-        batch: DataFrame | None = None,
-        pending: DataFrame | None = None,
-    ) -> None:
-        """Materialize the rollup cascade (O6, src/hoard.coffee:71-178):
-        a full rebuild, or with ``batch`` a recompute over the batch's date
-        range (see ``_propagate_many_impl``)."""
-        self.propagate_many([metric], batch=batch, pending=pending)
+    def propagate(self, metric: str) -> None:
+        """Rebuild one metric's rollup cascade (O6, src/hoard.coffee:71-178)."""
+        self.propagate_many([metric])
 
     def propagate_many(
         self,
         metrics: list[str],
         batch: DataFrame | None = None,
-        pending: DataFrame | None = None,
-        touched_by_tier: dict[int, set[tuple[str, str]]] | None = None,
+        spans: dict[tuple[str, int], tuple[int, int]] | None = None,
     ) -> None:
         """See ``_propagate_many_impl``; serialized by the writer lock."""
         with self._writer_lock():
-            self._propagate_many_impl(metrics, batch, pending, touched_by_tier)
+            self._propagate_many_impl(metrics, batch, spans)
 
     def _propagate_many_impl(
         self,
         metrics: list[str],
         batch: DataFrame | None = None,
-        pending: DataFrame | None = None,
-        touched_by_tier: dict[int, set[tuple[str, str]]] | None = None,
+        spans: dict[tuple[str, int], tuple[int, int]] | None = None,
     ) -> None:
-        """Materialize the rollup cascade for metrics SHARING one policy.
+        """Materialize the rollup cascade for metrics SHARING one policy,
+        written with dynamic partition overwrite: a full rebuild, or the
+        partitions one batch dirties.
 
-        Three scopes, each written with dynamic partition overwrite:
+        ``batch`` is a ``prepare``d batch of these metrics, and ``spans``
+        maps each (metric, tier) it holds rows for to their (min, max)
+        ``bucket_ts`` (the write core's one collect). Cascade tier k then
+        recomputes exactly the (metric, date) partitions that the batch's
+        rows at tiers <= k dirty — the generalized ``_.uniq``
+        propagate-target dedup (src/hoard.coffee:373-378). The scans are
+        pruned to the day-aligned span of those rows, and a ``left_semi``
+        join against the batch keeps only the dirtied partitions, so the
+        touched set stays in the plan and never passes through the
+        driver. The batch is also unioned into every tier view before the
+        LWW collapse: the recompute reads only pre-existing history from
+        disk and takes the batch from memory, and rows already appended
+        collapse in LWW.
 
-        - ``touched_by_tier`` (cascade tier -> {(metric, date)}): exactly
-          the rollup partitions a batch touched — the generalized
-          ``_.uniq`` propagate-target dedup (src/hoard.coffee:373-378).
-          The write core collects these sets (``_collect_touched``).
-        - ``batch`` (a prepared batch covering the metrics): every date
-          in the batch's per-tier min/max bucket span — a superset of the
-          touched scope, so value-equal by construction. The write core
-          passes it for a backfill whose touched list is over
-          ``propagate_touched_cap``.
-        - neither: a full rebuild.
-
-        ``pending``: the same prepared batch when its rows are NOT yet
-        (or not necessarily yet) appended to the points table — the tier
-        views union it in before the LWW collapse, so the rollup pass
-        reads only pre-existing history from disk and takes the
-        micro-batch from memory. Duplicates (rows both on disk and in
-        pending) collapse in LWW, so passing it is always safe.
-
-        Scale contract: the whole call runs O(tiers) Spark jobs regardless
-        of metric count — per tier, one multi-metric groupBy recompute and
-        one partitioned write. Never a per-metric driver loop (that was
-        the round-1 scale-killer: a 100k-metric micro-batch cost
-        O(metrics x tiers) jobs).
+        Scale contract: per cascade tier, one multi-metric recompute and
+        one partitioned write, whatever the metric count. Never a
+        per-metric driver loop (that was the round-1 scale-killer: a
+        100k-metric micro-batch cost O(metrics x tiers) jobs).
         """
         # the cascade/xff come from metrics[0]; a caller mixing policies
         # would get rollups computed with the wrong tier spans, silently
         # persisted — validate up front like fetch_many does
         info = self._require_shared_policy(metrics, "propagate_many")
-        cascade = plan_cascade(info)
-        if not cascade:
-            return
-
-        range_by_tier: dict[int, tuple[int, int]] | None = None
-        if touched_by_tier is None and batch is not None:
-            # per-tier min/max bucket spans (one #tiers-row agg job); each
-            # cascade tier is recomputed over that date range as a
-            # predicate instead of a touched list
-            batch = batch.select("metric", "tier", "bucket_ts")
-            spans = {
-                r["tier"]: (r["lo"], r["hi"])
-                for r in batch.groupBy("tier")
-                .agg(
-                    F.min("bucket_ts").alias("lo"),
-                    F.max("bucket_ts").alias("hi"),
-                )
-                .collect()
-            }
-            range_by_tier = {}
-            for tier_k, _, _lspp in cascade:
-                los = [lo for t, (lo, _) in spans.items() if t <= tier_k]
-                his = [hi for t, (_, hi) in spans.items() if t <= tier_k]
-                if los:
-                    range_by_tier[tier_k] = (min(los), max(his))
-            # only metrics the batch actually carries get the materialized
-            # flag (bounded by the metric universe — the caller's
-            # ``metrics`` list is already that size; it is the metrics x
-            # days product the cap avoids): a passed-but-absent metric was
-            # recomputed only within the range, so flagging its rollup
-            # complete would be wrong.
-            batch_metrics = sorted(
-                r["metric"]
-                for r in batch.select("metric").distinct().collect()
-            )
-
-        for tier_k, higher_spp, lower_spp in cascade:
-            touched_pairs: list[tuple[str, str]] | None = None
+        if batch is not None and spans is None:
+            raise HoardError("propagate_many: a batch needs its spans")
+        for tier_k, higher_spp, lower_spp in plan_cascade(info):
             ts_range: tuple[int, int] | None = None
-            if touched_by_tier is not None:
-                touched_pairs = sorted(touched_by_tier.get(tier_k, set()))
-                if not touched_pairs:
+            marked = metrics
+            if batch is not None:
+                below = {k: s for k, s in spans.items() if k[1] <= tier_k}
+                if not below:
                     continue
-                dates = sorted({d for _, d in touched_pairs})
-                lo = _day_start(dates[0])
-                hi = _day_start(dates[-1]) + 86400 + lower_spp
-                ts_range = (align_ts(lo, lower_spp), hi)
-            elif range_by_tier is not None:
-                span = range_by_tier.get(tier_k)
-                if span is None:
-                    continue
-                # same day-aligned window the touched path derives from its
-                # date list: every (metric, date) partition the write will
-                # replace is recomputed over its FULL day, and the range is
-                # aligned down to a lower-bucket boundary so the first
-                # covered bucket sees all its higher-tier rows.
-                lo_b, hi_b = align_ts(span[0], lower_spp), align_ts(
-                    span[1], lower_spp
+                marked = sorted({m for m, _ in below})
+                # every dirtied partition is recomputed over its FULL day,
+                # from a lower-bucket boundary so the first covered bucket
+                # sees all its higher-tier rows (alignment and date are
+                # monotone, so the span's ends bound every dirtied date)
+                lo = align_ts(min(s[0] for s in below.values()), lower_spp)
+                hi = align_ts(max(s[1] for s in below.values()), lower_spp)
+                ts_range = (
+                    align_ts(lo - lo % DAY, lower_spp),
+                    hi - hi % DAY + DAY + lower_spp,
                 )
-                lo = lo_b - (lo_b % 86400)
-                hi = hi_b - (hi_b % 86400) + 86400 + lower_spp
-                ts_range = (align_ts(lo, lower_spp), hi)
 
             # ts_range prunes the scans to the touched date partitions (a
             # one-day micro-batch must not list 3 years of directories)
             higher_view = self._tier_view_many(
-                metrics, tier_k - 1, ts_range, pending=pending
+                metrics, tier_k - 1, ts_range, pending=batch
             )
             if ts_range is not None:
                 higher_view = higher_view.where(
@@ -1026,73 +892,42 @@ class HoardEngine:
             )
             merged = merge_direct(
                 rolled,
-                self._direct_lww_many(
-                    metrics, tier_k, ts_range, pending=pending
-                ),
+                self._direct_lww_many(metrics, tier_k, ts_range, pending=batch),
             )
             out = (
                 merged.withColumn("tier", F.lit(tier_k))
                 .withColumn("date", bucket_date_col(F.col("bucket_ts")))
             )
-            if touched_pairs is not None:
-                pairs_df = self.spark.createDataFrame(
-                    [
-                        (m, datetime.strptime(d, "%Y-%m-%d").date())
-                        for m, d in touched_pairs
-                    ],
-                    T.StructType(
-                        [
-                            T.StructField("metric", T.StringType()),
-                            T.StructField("date", T.DateType()),
-                        ]
-                    ),
+            if batch is not None:
+                dirtied = batch.where(F.col("tier") <= tier_k).select(
+                    "metric",
+                    *(["mb"] if self.metric_buckets else []),
+                    bucket_date_col(
+                        F.col("bucket_ts")
+                        - F.pmod(F.col("bucket_ts"), F.lit(lower_spp))
+                    ).alias("date"),
                 )
                 out = out.join(
-                    F.broadcast(pairs_df), ["metric", "date"], "left_semi"
+                    dirtied.select("metric", "date"), ["metric", "date"], "left_semi"
                 )
-            out = out.select(
-                "bucket_ts", "value", "known", "tier", "metric", "date"
+            out = self.ingestor.with_mb(
+                out.select("bucket_ts", "value", "known", "tier", "metric", "date")
             )
             if self.metric_buckets:
-                out = out.withColumn(
-                    "mb",
-                    F.pmod(
-                        F.crc32(F.col("metric").cast("binary")),
-                        F.lit(self.metric_buckets),
-                    ).cast("int"),
-                )
                 # An (mb, date) partition holds MANY metrics; dynamic
                 # overwrite replaces whole partitions, so rows of metrics
-                # NOT being recomputed must ride along unchanged.
-                cols = ["bucket_ts", "value", "known", "tier", "metric",
-                        "date", "mb"]
+                # NOT being recomputed must ride along unchanged. Tuple-
+                # equality joins, NOT string-concat keys: a metric name
+                # containing a separator must never collide with another
+                # (metric, date) pair and drop a co-bucketed metric's rows.
                 existing = self._read_rollups().where(F.col("tier") == tier_k)
-                if touched_pairs is not None:
-                    # Tuple-equality joins, NOT string-concat keys: a metric
-                    # name containing the separator (e.g. 'a|2026-01-01')
-                    # must never collide with another (metric, date) pair
-                    # and silently drop a co-bucketed metric's rows.
-                    mb_dates = self.spark.createDataFrame(
-                        sorted(
-                            {
-                                (
-                                    self._mb_of(m),
-                                    datetime.strptime(d, "%Y-%m-%d").date(),
-                                )
-                                for m, d in touched_pairs
-                            }
-                        ),
-                        T.StructType(
-                            [
-                                T.StructField("mb", T.IntegerType()),
-                                T.StructField("date", T.DateType()),
-                            ]
-                        ),
-                    )
+                if batch is not None:
                     keep = existing.join(
-                        F.broadcast(mb_dates), ["mb", "date"], "left_semi"
+                        dirtied.select("mb", "date"), ["mb", "date"], "left_semi"
                     ).join(
-                        F.broadcast(pairs_df), ["metric", "date"], "left_anti"
+                        dirtied.select("metric", "date"),
+                        ["metric", "date"],
+                        "left_anti",
                     )
                 else:
                     overwritten = out.select("mb", "date").distinct()
@@ -1101,7 +936,7 @@ class HoardEngine:
                         .join(F.broadcast(overwritten), ["mb", "date"],
                               "left_semi")
                     )
-                out = out.unionByName(keep.select(*cols))
+                out = out.unionByName(keep.select(*out.columns))
             (
                 # cluster rows by output partition (one file per replaced
                 # (tier, mb|metric, date) dir instead of one per write
@@ -1133,12 +968,7 @@ class HoardEngine:
                 .mode("overwrite")
                 .parquet(self.rollups_path)
             )
-            self._mark_materialized(
-                tier_k,
-                sorted({m for m, _ in touched_pairs})
-                if touched_pairs is not None
-                else (batch_metrics if range_by_tier is not None else metrics),
-            )
+            self._mark_materialized(tier_k, marked)
 
     # --------------------------------------------------------------- fetch
     def fetch(

@@ -50,19 +50,23 @@ def is_data_file(name: str, ext: str = ".parquet") -> bool:
 
 def read_parquet_or_empty(spark: SparkSession, path: str, schema) -> DataFrame:
     """Read a parquet root with ``schema`` (a StructType or DDL string),
-    treating ONLY path-not-found as empty.
+    treating ONLY an absent root as empty.
 
-    A not-yet-written root is a normal state (a fresh warehouse or store);
-    any other analysis failure — corrupted footers, a conflicting schema —
+    A not-yet-written root is a normal state (a fresh warehouse or store):
+    it is probed for first, so Spark never analyses (and logs a
+    ``FileNotFoundException`` for) a path that is not there. A root that
+    vanishes between the probe and the read still reads as empty; any
+    other analysis failure — corrupted footers, a conflicting schema —
     must raise, not silently read as "no data"."""
     from pyspark.errors import AnalysisException
 
-    try:
-        return spark.read.schema(schema).parquet(path)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(getattr(e, "errorClass", "") or str(e)):
-            return spark.createDataFrame([], schema)
-        raise
+    if WarehouseFS(spark).isdir(path):
+        try:
+            return spark.read.schema(schema).parquet(path)
+        except AnalysisException as e:
+            if "PATH_NOT_FOUND" not in str(getattr(e, "errorClass", "") or str(e)):
+                raise
+    return spark.createDataFrame([], schema)
 
 
 # partition-dir values Spark writes verbatim (no escaping); the driver-side

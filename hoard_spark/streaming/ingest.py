@@ -29,8 +29,9 @@ signature, so each distinct policy costs one cascade write per batch, not
 one per metric — with millions of metrics and a handful of policies (the
 Graphite storage-schemas.conf pattern) this is the 100 TB-scale shape.
 Routing joins the batch against a broadcast policy dimension
-(``prepare_batch_multi``); the engine's write core then costs 2 +
-O(tiers) jobs per micro-batch, independent of metric AND policy count.
+(``prepare_batch_multi``); the engine's write core then runs one collect,
+the append, and one recompute and write per cascade tier of each policy
+group (see ``HoardEngine._ingest_prepared``), whatever the metric count.
 """
 
 from __future__ import annotations
@@ -119,10 +120,10 @@ def ingest_microbatch(
     # Driver-side control plane: group the CATALOG's metrics by policy
     # signature (routing and alignment depend only on the policy, never
     # the metric name). The batch's own metric set is discovered by the
-    # engine's fused touched pass — no separate distinct job, and no
-    # metric-name ``isin`` literal in any plan (a 100k-metric batch
-    # would make that a planning hazard; the broadcast dim join is the
-    # scalable form of the same filter).
+    # engine's one (metric, tier) span collect — no separate distinct
+    # job, and no metric-name ``isin`` literal in any plan (a 100k-metric
+    # batch would make that a planning hazard; the broadcast dim join is
+    # the scalable form of the same filter).
     by_sig: list[tuple] = []
     sig_index: dict[tuple, int] = {}
     for m in known:

@@ -217,3 +217,32 @@ def test_uri_warehouse_shares_control_plane(spark, tmp_path):
         other = HoardEngine(spark, root)
         ti, v = other.fetch("m", 1311274000, 1311281000, now=1311300000)
         assert 7.25 in v, (root, v)
+
+
+def test_absent_root_reads_empty_without_spark_analysis(spark, tmp_path, monkeypatch):
+    """An absent root is probed for, not read: Spark never analyses the
+    path (nor logs a FileNotFoundException for it). A written root is
+    read through ``spark.read``."""
+    from pyspark.sql import SparkSession
+
+    from hoard_spark.fsutil import read_parquet_or_empty
+
+    reads = []
+    real_read = SparkSession.read
+
+    def spy(self):
+        reads.append(1)
+        return real_read.fget(self)
+
+    monkeypatch.setattr(SparkSession, "read", property(spy))
+    schema = "k long, v string"
+    absent = read_parquet_or_empty(spark, str(tmp_path / "absent"), schema)
+    assert reads == []
+    assert absent.schema.simpleString() == "struct<k:bigint,v:string>"
+    assert absent.collect() == []
+
+    spark.createDataFrame([(1, "a")], schema).write.parquet(str(tmp_path / "root"))
+    assert read_parquet_or_empty(spark, str(tmp_path / "root"), schema).collect() == [
+        (1, "a")
+    ]
+    assert reads == [1]

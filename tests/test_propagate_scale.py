@@ -4,6 +4,7 @@ wrong" #4 — the per-metric loop cost O(metrics x tiers) jobs and made the
 driver the bottleneck at 100k-metric scale).
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from hoard_spark.streaming.ingest import ingest_microbatch
@@ -124,49 +125,94 @@ def test_one_catalog_write_per_microbatch(spark, tmp_path, monkeypatch):
     )
 
 
-def test_backfill_over_touched_cap_matches_uncapped(spark, tmp_path):
-    """VERDICT r8 item 4: a multi-metric HISTORICAL backfill whose
-    (metric, day) touched list exceeds ``propagate_touched_cap`` must
-    skip the driver-side touched collect and recompute each cascade tier
-    over the batch's min/max date range instead — value-equal to the
-    uncapped path (rollups, materialized flags, and fetch)."""
+@pytest.mark.parametrize("metric_buckets", [None, 4], ids=["default", "bucketed"])
+def test_incremental_backfill_matches_full_rebuild(spark, tmp_path, metric_buckets):
+    """A multi-metric 3-day backfill ingested as micro-batches (each
+    cascade tier recomputing only the partitions the batch dirtied)
+    leaves the same rollups, materialized flags and fetches as the same
+    rows ingested without propagation and then rebuilt in full. Tier 0
+    keeps one day and tier 1 two, so the older rows route straight past
+    tier 0 (and tier 1): tier k's recompute must be scoped by the batch's
+    rows at every tier <= k. On the bucketed layout, co-bucketed metrics'
+    rows ride along each (mb, date) overwrite."""
     from hoard_spark.engine import HoardEngine
 
-    archives = [(3600, 24 * 30), (86400, 60)]  # hourly raw -> daily tier
+    archives = [(3600, 24), (21600, 8), (86400, 60)]
+    metrics = [f"b{m}" for m in range(4)]
+    rows = [
+        (metric, NOW - 3600 * h, float(m * 1000 + h))
+        for m, metric in enumerate(metrics)
+        for h in range(1, 3 * 24)
+    ]
+    # every batch spans all three days, so each recompute merges the
+    # batch with history an earlier batch wrote
+    batches = [rows[i::3] for i in range(3)]
 
-    def batch():
-        rows = []
-        for m in range(4):
-            for d in range(3):
-                for h in range(24):
-                    ts = NOW - 86400 * (d + 1) + 3600 * h
-                    rows.append(
-                        (f"b{m}", ts, float(m * 100 + d * 10 + h))
-                    )
-        return spark.createDataFrame(
-            rows, "metric string, ts long, value double"
-        )
-
-    def run(cap):
-        eng = HoardEngine(
-            spark,
-            str(tmp_path / f"wh_cap{cap}"),
-            propagate_touched_cap=cap,
-        )
-        for m in range(4):
-            eng.create(f"b{m}", archives)
-        ingest_microbatch(eng, batch(), batch_id=0, now=NOW)
+    def run(name, incremental):
+        eng = HoardEngine(spark, str(tmp_path / name), metric_buckets=metric_buckets)
+        for metric in metrics:
+            eng.create(metric, archives)
+        for i, b in enumerate(batches):
+            df = spark.createDataFrame(b, "metric string, ts long, value double")
+            ingest_microbatch(eng, df, batch_id=i, now=NOW, propagate=incremental)
+        if not incremental:
+            eng.propagate_many(metrics)
         roll = sorted(
-            (r["tier"], r["metric"], r["bucket_ts"],
-             round(r["value"], 9), r["known"])
+            (r["tier"], r["metric"], r["bucket_ts"], round(r["value"], 9), r["known"])
             for r in eng._read_rollups().collect()
         )
-        return eng, roll
+        fetched = [
+            eng.fetch(metric, NOW - span, NOW, now=NOW)
+            for metric in metrics
+            for span in (12 * 3600, 2 * 86400, 3 * 86400)
+        ]
+        return roll, eng._materialized, fetched
 
-    eng_u, roll_u = run(10**6)  # touched list far below cap: exact path
-    eng_c, roll_c = run(2)  # 4 metrics x ~4 coarse days >> 2: capped path
-    assert roll_u and roll_c == roll_u
-    assert eng_c._materialized == eng_u._materialized
-    ti_u, v_u = eng_u.fetch("b1", NOW - 86400 * 3, NOW, now=NOW)
-    ti_c, v_c = eng_c.fetch("b1", NOW - 86400 * 3, NOW, now=NOW)
-    assert ti_u == ti_c and v_u == v_c
+    inc, full = run("incremental", True), run("full", False)
+    assert {r[0] for r in inc[0]} == {1, 2}
+    assert inc == full
+
+
+@pytest.mark.parametrize("metric_buckets", [None, 4], ids=["default", "bucketed"])
+def test_cascade_builds_no_driver_side_dataframe(
+    spark, tmp_path, monkeypatch, metric_buckets
+):
+    """The batch's touched partitions stay in the plan: the cascade of a
+    micro-batch into a warehouse whose rollups root exists builds no
+    DataFrame from driver rows (a pair list per tier would), and runs as
+    one ``propagate_many`` call per policy group — the call the
+    benchmark traces as ``rollup.propagate``."""
+    import threading
+
+    from pyspark.sql import SparkSession
+
+    from hoard_spark.engine import HoardEngine
+
+    engine = HoardEngine(spark, str(tmp_path / "wh"), metric_buckets=metric_buckets)
+    for m in range(3):
+        engine.create(f"m{m:03d}", ARCHIVES)
+    ingest_microbatch(engine, _batch_df(spark, 3), batch_id=0, now=NOW)
+    assert engine.fs.isdir(engine.rollups_path)
+
+    inside = threading.local()
+    calls = {"propagate_many": 0, "createDataFrame": 0}
+    real_propagate = HoardEngine.propagate_many
+    real_create = SparkSession.createDataFrame
+
+    def propagate_many(self, *a, **kw):
+        calls["propagate_many"] += 1
+        inside.active = True
+        try:
+            return real_propagate(self, *a, **kw)
+        finally:
+            inside.active = False
+
+    def create(self, *a, **kw):
+        if getattr(inside, "active", False):
+            calls["createDataFrame"] += 1
+        return real_create(self, *a, **kw)
+
+    monkeypatch.setattr(HoardEngine, "propagate_many", propagate_many)
+    monkeypatch.setattr(SparkSession, "createDataFrame", create)
+    ingest_microbatch(engine, _batch_df(spark, 3), batch_id=1, now=NOW + 600)
+    assert calls == {"propagate_many": 1, "createDataFrame": 0}

@@ -43,25 +43,12 @@ def main() -> None:
     if not names:
         sys.exit("usage: bench_queries.py <query> [...]")
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from bench import suite_session
     from hoard_spark.queries import all_queries, release_caches
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("hoard-spark-bench-queries")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", "24g")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 << 20))
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = suite_session("hoard-spark-bench-queries")
 
     registry = all_queries()
     unknown = [n for n in names if n not in registry]

@@ -3,17 +3,22 @@
 Usage: python tools/capture_plans.py <tag> [query ...]
 
 Writes plans/<tag>/<query>_<suffix>.txt (suffix via $PLAN_SUFFIX,
-default "before"). Session shape mirrors bench.py so plan shapes match
-what the bench executes (same AQE, broadcast threshold, shuffle
-partitions). Queries whose *construction* fires jobs (q24's offset
-collect, the ANN/cluster artifact builders on a cold store) run those
-jobs here too — the captured plan is the terminal plan the noop sink
-executes.
+default "before"). The session is bench.py's ``suite_session``, so plan
+shapes match what the bench executes (same AQE, broadcast threshold,
+shuffle partitions). Queries whose *construction* fires jobs (q24's
+offset collect, the ANN/cluster artifact builders on a cold store) run
+those jobs here too — the captured plan is the terminal plan the noop
+sink executes.
+
+Dumps are normalized so two captures of one tree diff empty: exchange
+``plan_id``s are a session-wide counter, and AQE numbers query stages
+and ``codegen id``s in the order concurrent stages finish.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 from pathlib import Path
 
@@ -21,7 +26,19 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+_UNSTABLE = (
+    (re.compile(r"\[plan_id=\d+\]"), "[plan_id=N]"),
+    (re.compile(r"\[codegen id : \d+\]"), "[codegen id : N]"),
+    # a query stage's id is its block's ``Arguments`` line
+    (re.compile(r"(QueryStage\n(?:.+\n)*?Arguments: )\d+"), r"\g<1>N"),
+)
+
+
+def normalize(txt: str) -> str:
+    for pattern, repl in _UNSTABLE:
+        txt = pattern.sub(repl, txt)
+    return txt
 
 
 def main() -> None:
@@ -31,24 +48,10 @@ def main() -> None:
     out_dir = REPO / "plans" / tag
     out_dir.mkdir(parents=True, exist_ok=True)
 
-    from pyspark.sql import SparkSession
-
+    from bench import suite_session
     from hoard_spark.queries import all_queries, release_caches
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("hoard-spark-capture-plans")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", "24g")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 << 20))
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = suite_session("hoard-spark-capture-plans")
 
     jvm = spark.sparkContext._jvm
     for name, q in sorted(all_queries().items()):
@@ -59,7 +62,7 @@ def main() -> None:
             txt = jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
-            (out_dir / f"{name}_{suffix}.txt").write_text(txt)
+            (out_dir / f"{name}_{suffix}.txt").write_text(normalize(txt))
             print(f"# {name}: ok", file=sys.stderr)
         except Exception as e:  # noqa: BLE001 — capture the rest
             (out_dir / f"{name}_{suffix}.txt").write_text(
