@@ -15,6 +15,7 @@ Layout:
     rollup.py     — cascaded xff-gated downsampling (propagate; ref O6)
     fetch.py      — range fetch w/ tier routing + gap-fill (ref O7)
     engine.py     — HoardEngine facade tying the above together
+    layout.py     — the warehouse partition layout and its one writer
     session.py    — tuned SparkSession builder
     functions/    — scalar helpers (bucket alignment, spines, vector math)
     queries/      — the 89-query conformance surface (SURVEY.md §2C)

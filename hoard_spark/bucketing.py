@@ -10,7 +10,7 @@ shuffle is paid once at write, amortized over every subsequent query.
 bucket on the join key with compatible bucket counts.)
 
 This complements the engine's own directory-hash layout
-(HoardEngine ``metric_buckets``, hoard_spark/engine.py:23 — which
+(HoardEngine ``metric_buckets``, hoard_spark/layout.py — which
 targets partition-pruned point reads): ``bucketBy`` targets join/agg
 locality on analytic tables. tests/test_bucketing.py pins the plan
 contract: co-bucketed join has no shuffle Exchange, the unbucketed twin

@@ -40,6 +40,19 @@ class HoardError(Exception):
     """Engine-level error (mirrors the reference's callback errors)."""
 
 
+def save_json(path: str, obj) -> None:
+    """Write one control-plane JSON file atomically: a failure mid-write
+    leaves the previous file (or none), never a truncated one."""
+    tmp = path + ".tmp"
+    try:
+        with open(tmp, "w") as f:
+            json.dump(obj, f)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+
+
 @dataclass(frozen=True)
 class ArchiveInfo:
     """One retention tier. ``tier`` 0 is the highest resolution."""
@@ -79,6 +92,15 @@ class MetricInfo:
     @property
     def max_retention(self) -> int:
         return max(a.retention for a in self.archives)
+
+    @property
+    def policy(self) -> tuple:
+        """The retention-policy signature, ``(((spp, points), ...), xff)``:
+        metrics with equal ones route, align and roll up alike."""
+        return (
+            tuple((a.seconds_per_point, a.points) for a in self.archives),
+            self.x_files_factor,
+        )
 
     def archive_for_age(self, age_seconds: int) -> ArchiveInfo | None:
         """Highest-precision archive whose retention covers ``age_seconds``.
@@ -186,10 +208,9 @@ class Catalog:
             self._metrics[info.metric] = info
 
     def _save(self) -> None:
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"metrics": [m.to_dict() for m in self._metrics.values()]}, f)
-        os.replace(tmp, self.path)
+        save_json(
+            self.path, {"metrics": [m.to_dict() for m in self._metrics.values()]}
+        )
 
     # -- API (reference O1 / O2) -------------------------------------------
     def create(

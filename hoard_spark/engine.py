@@ -34,6 +34,10 @@ Partitioning by (tier, metric, date) gives partition pruning on every fetch
 partition delete. For very-high-cardinality metric spaces, the opt-in
 hash-bucketed layout (``metric_buckets=N``) swaps the ``metric`` partition
 column for ``mb = crc32(metric) % N`` with ``metric`` as a data column.
+hoard_spark/layout.py is that layout decision, in one ``Layout``: the
+partition columns, the ``mb`` hash, the partition-dir names and the one
+partitioned writer that the append, the rollup recompute, compaction and
+drop share.
 Data-plane filesystem operations go through the Hadoop FileSystem API
 (hoard_spark/fsutil.py) so maintenance works on file://, HDFS and S3
 alike; the driver-side JSON control plane (catalog/seq/layout/markers) is
@@ -49,7 +53,6 @@ import json
 import os
 import time
 import uuid
-import zlib
 from contextlib import contextmanager
 from datetime import datetime, timezone
 
@@ -58,7 +61,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from hoard_spark.catalog import Catalog, HoardError, MetricInfo
+from hoard_spark.catalog import Catalog, HoardError, MetricInfo, save_json
 from hoard_spark.fetch import (
     TimeInfo,
     collect_values,
@@ -77,6 +80,7 @@ from hoard_spark.fsutil import (
 )
 from hoard_spark.functions import align_ts, bucket_date_col
 from hoard_spark.ingest import Ingestor, lww, route_points, validate_single
+from hoard_spark.layout import Layout
 from hoard_spark.rollup import (
     merge_direct,
     plan_cascade,
@@ -141,7 +145,8 @@ class HoardEngine:
         branch and parquet min/max on the sorted ``metric`` column skips
         row groups within it. The layout choice is persisted with the
         warehouse (the stored value wins on reopen) because it is a
-        physical property of the written data.
+        physical property of the written data; ``self.layout``
+        (hoard_spark/layout.py) carries it to every path and writer.
 
         ``fetch_driver_max_files``: the one file budget of both driver
         routes, which run with no Spark job — a ``fetch()`` whose pruned
@@ -169,8 +174,8 @@ class HoardEngine:
             self.metric_buckets = stored
         else:
             self.metric_buckets = metric_buckets
-            with open(self._layout_path, "w") as f:
-                json.dump({"metric_buckets": metric_buckets}, f)
+            save_json(self._layout_path, {"metric_buckets": metric_buckets})
+        self.layout = Layout(self.metric_buckets)
         # (tier, metric) pairs with a materialized rollup — replaces the
         # per-metric directory probe, which the bucketed layout can't offer
         self._mat_path = os.path.join(ctl_dir, "_hoard_materialized.json")
@@ -180,9 +185,7 @@ class HoardEngine:
                 self._materialized = set(json.load(f))
         self._lock_path = os.path.join(ctl_dir, "_hoard_writer.lock")
         self._lock_depth = 0
-        self.ingestor = Ingestor(
-            spark, self.catalog, self.points_path, self.metric_buckets
-        )
+        self.ingestor = Ingestor(spark, self.points_path, self.layout)
 
     @contextmanager
     def _writer_lock(self):
@@ -228,20 +231,11 @@ class HoardEngine:
             os.close(fd)
 
     # ------------------------------------------------------- layout helpers
-    @property
-    def _part_cols(self) -> list[str]:
-        if self.metric_buckets:
-            return ["tier", "mb", "date"]
-        return ["tier", "metric", "date"]
-
-    def _mb_of(self, metric: str) -> int:
-        return zlib.crc32(metric.encode("utf-8")) % self.metric_buckets
-
     def _metrics_pred(self, metrics: list[str]):
         pred = F.col("metric").isin(metrics)
         if self.metric_buckets:
             pred = pred & F.col("mb").isin(
-                sorted({self._mb_of(m) for m in metrics})
+                sorted({self.layout.mb_of(m) for m in metrics})
             )
         return pred
 
@@ -250,10 +244,7 @@ class HoardEngine:
         if keys <= self._materialized:
             return
         self._materialized |= keys
-        tmp = self._mat_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(sorted(self._materialized), f)
-        os.replace(tmp, self._mat_path)
+        save_json(self._mat_path, sorted(self._materialized))
 
     def _is_materialized(self, tier: int, metric: str) -> bool:
         if f"{tier}:{metric}" in self._materialized:
@@ -261,7 +252,9 @@ class HoardEngine:
         # legacy unbucketed warehouses predate the marker file
         if not self.metric_buckets:
             return self.fs.isdir(
-                os.path.join(self.rollups_path, f"tier={tier}", f"metric={metric}")
+                os.path.join(
+                    self.rollups_path, f"tier={tier}", self.layout.branch(metric)
+                )
             )
         return False
 
@@ -323,10 +316,7 @@ class HoardEngine:
                         start = max(start, top + 1)
             if start + n >= 1 << 63:
                 raise HoardError("warehouse write sequence exhausted")
-            tmp = self._seq_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump({"scope": "warehouse", "next": start + n}, f)
-            os.replace(tmp, self._seq_path)
+            save_json(self._seq_path, {"scope": "warehouse", "next": start + n})
             return start
 
     def update(
@@ -438,7 +428,8 @@ class HoardEngine:
             key = (root, tier, day)
             if key not in listed:
                 listed[key] = self.fs.list_date_files(
-                    f"{root}/tier={tier}/metric={metric}", [_day_name(day)]
+                    f"{root}/tier={tier}/{self.layout.branch(metric)}",
+                    [_day_name(day)],
                 )
                 if sum(map(len, listed.values())) > budget:
                     raise _OverBudget
@@ -541,8 +532,8 @@ class HoardEngine:
         pq.write_table(table, sink, compression="snappy")
         self.fs.swap_file(
             sink.getvalue().to_pybytes(),
-            f"{root}/tier={tier}/metric={metric}/date={_day_name(day)}/"
-            f"part-{uuid.uuid4().hex}.snappy.parquet",
+            f"{root}/tier={tier}/{self.layout.branch(metric)}/"
+            f"date={_day_name(day)}/part-{uuid.uuid4().hex}.snappy.parquet",
             old,
             publish_first,
         )
@@ -615,13 +606,7 @@ class HoardEngine:
 
                 def _append_points() -> None:
                     try:
-                        self.ingestor.write(
-                            prepared.select(
-                                "metric", "tier", "bucket_ts", "date",
-                                "value", "seq", "ts",
-                                *(["mb"] if self.metric_buckets else []),
-                            )
-                        )
+                        self.ingestor.write(prepared.drop("_sig"))
                     except BaseException as e:  # surfaced after join below
                         err.append(e)
 
@@ -910,7 +895,7 @@ class HoardEngine:
                 out = out.join(
                     dirtied.select("metric", "date"), ["metric", "date"], "left_semi"
                 )
-            out = self.ingestor.with_mb(
+            out = self.layout.with_mb(
                 out.select("bucket_ts", "value", "known", "tier", "metric", "date")
             )
             if self.metric_buckets:
@@ -938,32 +923,12 @@ class HoardEngine:
                     )
                 out = out.unionByName(keep.select(*out.columns))
             (
-                # cluster rows by output partition (one file per replaced
-                # (tier, mb|metric, date) dir instead of one per write
-                # task — the rollup dirs are fetch-short-circuit read
-                # targets; the shuffled frame is partition-scoped and
-                # rollup-sized, so the extra exchange is cheap even per
-                # micro-batch), then by metric within each file so parquet
-                # min/max statistics on `metric` skip row groups at read.
-                # Explicit partition count: a columns-only repartition is
-                # an AQE coalesce target and a small batch collapses the
-                # write to one task; with the count pinned each dir still
-                # hashes to exactly one task (one file per dir) while
-                # distinct dirs write in parallel.
-                out.repartition(
-                    self.spark.sparkContext.defaultParallelism,
-                    *self._part_cols,
-                )
-                .sortWithinPartitions(
-                    *self._part_cols,
-                    *[c for c in ("metric", "bucket_ts")
-                      if c not in self._part_cols],
-                )
-                .write.partitionBy(*self._part_cols)
-                # set dynamic overwrite ON THE WRITER: correctness must not
-                # depend on spark.sql.sources.partitionOverwriteMode in the
-                # session (a static-mode session would truncate every other
-                # partition of the shared rollups root).
+                # one file per replaced dir: the rollup dirs are driver-route
+                # read targets. Dynamic overwrite is set ON THE WRITER:
+                # correctness must not depend on the session's
+                # partitionOverwriteMode (a static-mode session would
+                # truncate every other partition of the shared root).
+                self.layout.writer(out)
                 .option("partitionOverwriteMode", "dynamic")
                 .mode("overwrite")
                 .parquet(self.rollups_path)
@@ -1009,11 +974,6 @@ class HoardEngine:
             # data column read_lww filters, so any name reads here)
             return None
         root = self.points_path if tier == 0 else self.rollups_path
-        mid = (
-            f"mb={self._mb_of(metric)}"
-            if self.metric_buckets
-            else f"metric={metric}"
-        )
         # the same date partitions _date_pred prunes the Spark scan to
         days = date_span(ti.from_interval, ti.to_interval)
         if not self._date_span_ok(len(days)):
@@ -1021,7 +981,9 @@ class HoardEngine:
         dates = [d.isoformat() for d in days]
         # ONE listing round-trip for the whole window on remote stores
         # (globStatus date alternation); per-present-date scandir locally.
-        files = self.fs.list_date_files(f"{root}/tier={tier}/{mid}", dates)
+        files = self.fs.list_date_files(
+            f"{root}/tier={tier}/{self.layout.branch(metric)}", dates
+        )
         if len(files) > self.fetch_driver_max_files:
             return None
         if not files:
@@ -1115,16 +1077,12 @@ class HoardEngine:
         """Verify every metric shares one policy signature; return its info."""
         if not metrics:
             raise HoardError(f"{op} requires at least one metric")
-        sig = None
         first = None
         for m in metrics:
             info = self.catalog.info(m)
-            s = tuple(
-                (a.seconds_per_point, a.points) for a in info.archives
-            ) + (info.x_files_factor,)
-            if sig is None:
-                sig, first = s, info
-            elif s != sig:
+            if first is None:
+                first = info
+            elif info.policy != first.policy:
                 raise HoardError(
                     f"{op} requires metrics sharing one retention policy; "
                     f"{metrics[0]!r} and {m!r} differ"
@@ -1181,12 +1139,7 @@ class HoardEngine:
         means it is time for ``compact(metric)`` (which rewrites each
         partition to exactly one file). One listStatus per date dir,
         scoped to the metric's (tier, metric|mb) branch."""
-        sub = (
-            f"mb={self._mb_of(metric)}"
-            if self.metric_buckets
-            else f"metric={metric}"
-        )
-        root = f"{self.points_path}/tier={tier}/{sub}"
+        root = f"{self.points_path}/tier={tier}/{self.layout.branch(metric)}"
         out: dict[str, int] = {}
         for d in self.fs.listdir(root):
             if not d.startswith("date="):
@@ -1212,7 +1165,7 @@ class HoardEngine:
             if self.metric_buckets:
                 # bucketed layout: the swap granularity is the hash bucket,
                 # so compact every metric sharing this metric's bucket
-                pts = pts.where(F.col("mb") == self._mb_of(metric))
+                pts = pts.where(F.col("mb") == self.layout.mb_of(metric))
             else:
                 pts = pts.where(F.col("metric") == metric)
         folded = (
@@ -1225,38 +1178,16 @@ class HoardEngine:
             .withColumn("date", bucket_date_col(F.col("bucket_ts")))
             .select("bucket_ts", "value", "seq", "ts", "tier", "metric", "date")
         )
-        if self.metric_buckets:
-            folded = folded.withColumn(
-                "mb",
-                F.pmod(
-                    F.crc32(F.col("metric").cast("binary")),
-                    F.lit(self.metric_buckets),
-                ).cast("int"),
-            )
         tmp = self.points_path + "_compacting"
-        (
-            # cluster rows by their output partition first: after the LWW
-            # groupBy the rows of one (tier, metric, date) are scattered
-            # across tasks, and a direct write would leave up to
-            # shuffle.partitions files per partition dir — defeating the
-            # point of compaction (bounded read-side file counts, and the
-            # fetch short-circuit's file budget). One extra shuffle buys
-            # exactly ONE file per partition dir.
-            folded.repartition(*self._part_cols)
-            .sortWithinPartitions("metric", "bucket_ts")
-            .write.partitionBy(*self._part_cols)
-            .mode("overwrite")
-            .parquet(tmp)
-        )
+        # after the LWW groupBy a partition's rows are scattered across
+        # tasks; the clustered writer leaves exactly ONE file per dir,
+        # the point of compaction (the driver routes' file budget)
+        self.layout.writer(self.layout.with_mb(folded)).mode("overwrite").parquet(tmp)
         if metric is None:
             self.fs.rename(tmp, self.points_path)
         else:
             # swap only the rewritten partitions
-            sub = (
-                f"mb={self._mb_of(metric)}"
-                if self.metric_buckets
-                else f"metric={metric}"
-            )
+            sub = self.layout.branch(metric)
             for tier_dir in self.fs.listdir(tmp):
                 if not tier_dir.startswith("tier="):
                     continue
@@ -1286,57 +1217,39 @@ class HoardEngine:
 
     def _drop_impl(self, metric: str) -> None:
         self.catalog.info(metric)  # raises HoardError on unknown metric
-        if not self.metric_buckets:
-            for root in (self.points_path, self.rollups_path):
-                if not self.fs.isdir(root):
-                    continue
-                for tier_dir in self.fs.listdir(root):
-                    if not tier_dir.startswith("tier="):
-                        continue
-                    p = os.path.join(root, tier_dir, f"metric={metric}")
-                    if self.fs.isdir(p):
-                        self.fs.rmtree(p)
-        else:
-            mb = self._mb_of(metric)
-            for root, reader in (
-                (self.points_path, self._read_points),
-                (self.rollups_path, self._read_rollups),
-            ):
-                if not self.fs.isdir(root):
-                    continue
+        sub = self.layout.branch(metric)
+        for root, reader in (
+            (self.points_path, self._read_points),
+            (self.rollups_path, self._read_rollups),
+        ):
+            if not self.fs.isdir(root):
+                continue
+            tmp = root + "_dropping"
+            if self.metric_buckets:
                 keep = reader().where(
-                    (F.col("mb") == mb) & (F.col("metric") != metric)
+                    (F.col("mb") == self.layout.mb_of(metric))
+                    & (F.col("metric") != metric)
                 )
-                tmp = root + "_dropping"
-                (
-                    keep.sortWithinPartitions("metric", "bucket_ts")
-                    .write.partitionBy(*self._part_cols)
-                    .mode("overwrite")
-                    .parquet(tmp)
-                )
-                sub = f"mb={mb}"
-                for tier_dir in self.fs.listdir(root):
-                    if not tier_dir.startswith("tier="):
-                        continue
-                    dst = os.path.join(root, tier_dir, sub)
-                    src = os.path.join(tmp, tier_dir, sub)
-                    if self.fs.isdir(src):
-                        self.fs.rename(src, dst)
-                    elif self.fs.isdir(dst):
-                        # the bucket held only this metric
-                        self.fs.rmtree(dst)
-                if self.fs.isdir(tmp):
-                    self.fs.rmtree(tmp)
+                self.layout.writer(keep).mode("overwrite").parquet(tmp)
+            for tier_dir in self.fs.listdir(root):
+                if not tier_dir.startswith("tier="):
+                    continue
+                dst = os.path.join(root, tier_dir, sub)
+                src = os.path.join(tmp, tier_dir, sub)
+                if self.metric_buckets and self.fs.isdir(src):
+                    self.fs.rename(src, dst)
+                elif self.fs.isdir(dst):
+                    # the metric's dir, or a bucket that held only it
+                    self.fs.rmtree(dst)
+            if self.metric_buckets and self.fs.isdir(tmp):
+                self.fs.rmtree(tmp)
         self.catalog.drop(metric)
         stale = {
             k for k in self._materialized if k.split(":", 1)[1] == metric
         }
         if stale:
             self._materialized -= stale
-            mtmp = self._mat_path + ".tmp"
-            with open(mtmp, "w") as f:
-                json.dump(sorted(self._materialized), f)
-            os.replace(mtmp, self._mat_path)
+            save_json(self._mat_path, sorted(self._materialized))
 
     def drop_expired(self, metric: str, now: int | None = None) -> list[str]:
         """Retention enforcement: delete (tier, metric, date) partitions whose
@@ -1376,7 +1289,9 @@ class HoardEngine:
                 else:
                     cutoff = now - a.retention
                     tier_dirs = [
-                        os.path.join(root, f"tier={a.tier}", f"metric={metric}")
+                        os.path.join(
+                            root, f"tier={a.tier}", self.layout.branch(metric)
+                        )
                     ]
                 for tier_dir in tier_dirs:
                     for d in self.fs.listdir(tier_dir):

@@ -42,11 +42,11 @@ from __future__ import annotations
 import json
 import os
 import time
-import zlib
 
 from hoard_spark.catalog import Catalog, HoardError
 from hoard_spark.fetch import TimeInfo, date_span, plan_fetch, read_values
 from hoard_spark.fsutil import SAFE_PART_RE, is_data_file, strip_local_uri
+from hoard_spark.layout import Layout
 
 
 def _resolve_fs(warehouse_dir: str):
@@ -111,6 +111,7 @@ def python_fetch(
         metric_buckets = _fs_read_json(fs, layout_path).get(
             "metric_buckets"
         )
+    layout = Layout(metric_buckets)
 
     if tier > 0:
         materialized = False
@@ -122,7 +123,7 @@ def python_fetch(
         if not materialized and not metric_buckets:
             # legacy unbucketed warehouses predate the marker file
             materialized = _fs_isdir(
-                fs, f"{fsroot}/rollups/tier={tier}/metric={metric}"
+                fs, f"{fsroot}/rollups/tier={tier}/{layout.branch(metric)}"
             )
         if not materialized:
             raise HoardError(
@@ -138,13 +139,8 @@ def python_fetch(
         )
 
     root = f"{fsroot}/" + ("points" if tier == 0 else "rollups")
-    mid = (
-        f"mb={zlib.crc32(metric.encode('utf-8')) % metric_buckets}"
-        if metric_buckets
-        else f"metric={metric}"
-    )
     dates = [d.isoformat() for d in date_span(ti.from_interval, ti.to_interval)]
-    files = _list_date_files(fs, f"{root}/tier={tier}/{mid}", dates)
+    files = _list_date_files(fs, f"{root}/tier={tier}/{layout.branch(metric)}", dates)
 
     if not files and info.last_update > 0:
         # Backstop (ADVICE r10): the engine's fast path falls back to the

@@ -15,9 +15,13 @@ Reference semantics reproduced (citations into /root/reference):
   with an explicit monotone ingest sequence ``seq`` as the tie-break.
 
 Spark design: a batch is an append of aligned rows into a Parquet table
-partitioned by ``(tier, metric, date)``; there is no in-place overwrite at
-100 TB. LWW is enforced at read (window/max_by over ``seq``) and folded in
-physically by the compaction job (engine.compact). Appends are cheap and
+partitioned by ``(tier, metric, date)`` (or ``(tier, mb, date)``); there
+is no in-place overwrite at 100 TB. The append goes through the
+warehouse's one partitioned writer, ``Layout.writer``
+(hoard_spark/layout.py), which the rollup recompute, compaction, the
+bucketed drop and the Whisper import share. LWW is enforced at read
+(window/max_by over ``seq``) and folded in physically by the compaction
+job (engine.compact). Appends are cheap and
 contention-free; dedup cost rides on buckets actually read. A flush small
 enough for the driver (``route_points``, HoardEngine._flush_on_driver)
 instead rewrites each partition it touches as one folded file, with the
@@ -29,8 +33,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hoard_spark.catalog import Catalog, HoardError, MetricInfo
+from hoard_spark.catalog import HoardError, MetricInfo
 from hoard_spark.functions import align_col, align_ts, bucket_date_col
+from hoard_spark.layout import Layout
 
 POINTS_SCHEMA = "metric string, ts long, value double, seq long"
 
@@ -195,23 +200,10 @@ def lww(df: DataFrame) -> DataFrame:
 class Ingestor:
     """Writes prepared batches into the points table."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        catalog: Catalog,
-        points_path: str,
-        metric_buckets: int | None = None,
-    ):
+    def __init__(self, spark: SparkSession, points_path: str, layout: Layout):
         self.spark = spark
-        self.catalog = catalog
         self.points_path = points_path
-        self.metric_buckets = metric_buckets
-
-    @property
-    def part_cols(self) -> list[str]:
-        if self.metric_buckets:
-            return ["tier", "mb", "date"]
-        return ["tier", "metric", "date"]
+        self.layout = layout
 
     def prepare(self, df: DataFrame, by_sig, now: int) -> DataFrame:
         """Validate + route + align a batch of the metrics ``by_sig``
@@ -220,55 +212,15 @@ class Ingestor:
         exact rows ``write`` will append, which the engine's write core
         caches and reuses as the rollup pass's in-memory ``pending``
         view."""
-        return self.with_mb(
+        return self.layout.with_mb(
             prepare_batch_multi(df, policy_dim(self.spark, by_sig), now)
         )
 
-    def with_mb(self, df: DataFrame) -> DataFrame:
-        """Add the bucketed layout's ``mb`` column (no-op when unbucketed)."""
-        if self.metric_buckets:
-            df = df.withColumn(
-                "mb",
-                F.pmod(
-                    F.crc32(F.col("metric").cast("binary")),
-                    F.lit(self.metric_buckets),
-                ).cast("int"),
-            )
-        return df
-
     def write(self, prepared: DataFrame) -> None:
-        """Append a ``prepare``d batch to the points table."""
-        part_cols = self.part_cols
-        # Cluster the batch by output partition before writing (round 8):
-        # ONE file per (tier, mb|metric, date) dir per append instead of
-        # one per input task x dir — a 32-task batch spanning 30 dates
-        # would otherwise scatter ~tasks x dirs tiny files, which the
-        # rollup recompute and fetch short-circuit then pay to re-list
-        # and re-open. The shuffle is batch-sized (bounded per
-        # micro-batch) and also PARALLELIZES the write when the source
-        # arrives as few partitions (a single-file parquet batch wrote
-        # on one task before). Within each file rows stay clustered by
-        # (metric, bucket_ts) for parquet row-group min/max skipping —
-        # the Spark analog of the reference's contiguous-run write
-        # coalescing (src/hoard.coffee:302-323); sorting by the
-        # partition cols first satisfies FileFormatWriter's required
-        # ordering so it does not re-sort and destroy the secondary key.
-        sort_cols = part_cols + [
-            c for c in ("metric", "bucket_ts") if c not in part_cols
-        ]
-        # Explicit partition COUNT: a columns-only repartition is an AQE
-        # coalesce target, and a small micro-batch collapses to ONE task
-        # — serializing the write. With the count pinned, each (tier,
-        # mb|metric, date) dir still hashes to exactly one task (one
-        # file per dir) while distinct dirs spread across the cluster.
-        npart = self.spark.sparkContext.defaultParallelism
-        (
-            prepared.repartition(npart, *part_cols)
-            .sortWithinPartitions(*sort_cols)
-            .write.partitionBy(*part_cols)
-            .mode("append")
-            .parquet(self.points_path)
-        )
+        """Append a ``prepare``d batch to the points table through the
+        warehouse's one clustered writer (``Layout.writer``): one file per
+        touched (tier, metric|mb, date) dir per append."""
+        self.layout.writer(prepared).mode("append").parquet(self.points_path)
 
     def points_batch(
         self,

@@ -200,18 +200,6 @@ def read_policies(spark: SparkSession, path_glob: str) -> DataFrame:
     return files.select("path", "content").mapInPandas(unpack, POLICY_SCHEMA)
 
 
-def _with_layout(engine, df: DataFrame) -> DataFrame:
-    if engine.metric_buckets:
-        df = df.withColumn(
-            "mb",
-            F.pmod(
-                F.crc32(F.col("metric").cast("binary")),
-                F.lit(engine.metric_buckets),
-            ).cast("int"),
-        )
-    return df
-
-
 def import_tree(engine, path_glob: str, now: int | None = None) -> int:
     """Full migration: register each file's policy in the catalog and land
     its ring contents in the engine's native layout. Returns the number of
@@ -255,44 +243,24 @@ def import_tree(engine, path_glob: str, now: int | None = None) -> int:
     )
 
     pts = read_points(engine.spark, path_glob).persist()
-
-    tier0 = _with_layout(
-        engine,
-        pts.where(F.col("tier") == 0)
+    dated = pts.withColumn("date", bucket_date_col(F.col("bucket_ts")))
+    # the clustered writer gives each output dir ONE file: unclustered,
+    # the unpack stage's N-hundred input tasks would EACH open a file in
+    # EVERY (tier, mb|metric, date) dir (measured dominating a 10k-file
+    # tree's import wall)
+    tier0 = (
+        dated.where(F.col("tier") == 0)
         .withColumn("seq", F.lit(-1).cast("long"))
         .withColumn("ts", F.col("bucket_ts"))
-        .withColumn("date", bucket_date_col(F.col("bucket_ts")))
-        .select("bucket_ts", "value", "seq", "ts", "tier", "metric", "date"),
+        .select("bucket_ts", "value", "seq", "ts", "tier", "metric", "date")
     )
-    # repartition on the partition columns before the dynamic-partition
-    # write: the unpack stage's N-hundred input tasks would otherwise
-    # EACH open a file in EVERY (tier, mb|metric, date) output dir —
-    # tasks x dirs tiny files (measured dominating a 10k-file tree's
-    # import wall); after the shuffle each output dir is written by one
-    # task, and sortWithinPartitions keeps the per-metric row-group
-    # clustering the readers' min/max pruning relies on.
-    (
-        tier0.repartition(*engine._part_cols)
-        .sortWithinPartitions("metric", "bucket_ts")
-        .write.partitionBy(*engine._part_cols)
-        .mode("append")
-        .parquet(engine.points_path)
-    )
-
-    coarse = _with_layout(
-        engine,
-        pts.where(F.col("tier") >= 1)
+    coarse = (
+        dated.where(F.col("tier") >= 1)
         .withColumn("known", F.lit(0).cast("long"))
-        .withColumn("date", bucket_date_col(F.col("bucket_ts")))
-        .select("bucket_ts", "value", "known", "tier", "metric", "date"),
+        .select("bucket_ts", "value", "known", "tier", "metric", "date")
     )
-    (
-        coarse.repartition(*engine._part_cols)
-        .sortWithinPartitions("metric", "bucket_ts")
-        .write.partitionBy(*engine._part_cols)
-        .mode("append")
-        .parquet(engine.rollups_path)
-    )
+    for df, root in ((tier0, engine.points_path), (coarse, engine.rollups_path)):
+        engine.layout.writer(engine.layout.with_mb(df)).mode("append").parquet(root)
     for r in policies:
         for tier in range(1, len(r["archives"])):
             engine._mark_materialized(tier, [r["metric"]])
@@ -380,13 +348,10 @@ def export_tree(
         return 0
     os.makedirs(out_dir, exist_ok=True)
 
-    by_sig: dict[tuple, list[str]] = {}
+    by_sig: dict[tuple, list] = {}
     for m in metrics:
         info = engine.catalog.info(m)
-        sig = tuple(
-            (a.seconds_per_point, a.points) for a in info.archives
-        ) + (info.x_files_factor,)
-        by_sig.setdefault(sig, []).append(m)
+        by_sig.setdefault(info.policy, []).append(info)
 
     out_schema = T.StructType(
         [
@@ -395,9 +360,10 @@ def export_tree(
         ]
     )
     total = 0
-    for sig, group in by_sig.items():
-        archives = [(spp, pts) for spp, pts in sig[:-1]]
-        xff = float(sig[-1])
+    for infos in by_sig.values():
+        group = [i.metric for i in infos]
+        archives = [(a.seconds_per_point, a.points) for a in infos[0].archives]
+        xff = infos[0].x_files_factor
         views = []
         for tier in range(len(archives)):
             views.append(

@@ -47,13 +47,6 @@ from hoard_spark.engine import HoardEngine
 from hoard_spark.ingest import policy_dim, prepare_batch_multi
 
 
-def _policy_signature(info) -> tuple:
-    return (
-        tuple((a.seconds_per_point, a.points) for a in info.archives),
-        info.x_files_factor,
-    )
-
-
 def ingest_microbatch(
     engine: HoardEngine,
     batch_df: DataFrame,
@@ -128,13 +121,13 @@ def ingest_microbatch(
     sig_index: dict[tuple, int] = {}
     for m in known:
         info = engine.catalog.info(m)
-        s = _policy_signature(info)
+        s = info.policy
         if s not in sig_index:
             sig_index[s] = len(by_sig)
             by_sig.append((info, []))
         by_sig[sig_index[s]][1].append(m)
 
-    prepared = engine.ingestor.with_mb(
+    prepared = engine.layout.with_mb(
         prepare_batch_multi(batch_df, policy_dim(engine.spark, by_sig), now)
     )
     engine._ingest_prepared(prepared, by_sig, now, propagate)

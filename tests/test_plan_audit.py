@@ -118,6 +118,34 @@ def test_fetch_gap_fill_grid_is_generated(spark, engine):
     assert "NestedLoopJoin" not in plan and "CartesianProduct" not in plan, plan
 
 
+@pytest.mark.parametrize("metric_buckets", [None, 4])
+def test_layout_writer_clusters_each_dir_on_one_task(spark, metric_buckets):
+    """Every partitioned warehouse write (append, rollup recompute,
+    compaction, drop, Whisper import) runs ``Layout.writer``. Its plan
+    hashes rows on the partition columns into a PINNED count of tasks,
+    so each output dir is written by one task (one file), and sorts by
+    the partition columns then (metric, bucket_ts) within each task."""
+    from hoard_spark.layout import Layout
+
+    layout = Layout(metric_buckets)
+    df = layout.with_mb(
+        spark.createDataFrame(
+            [("m", 0, 3600, 1.0)],
+            "metric string, tier int, bucket_ts long, value double",
+        ).withColumn("date", F.to_date(F.from_unixtime("bucket_ts")))
+    )
+    # a DataFrameWriter holds the frame it writes as ``_df``
+    plan = re.sub(r"#\d+L?", "", plan_of(layout.writer(df)._df))
+    cols = layout.part_cols
+    n = spark.sparkContext.defaultParallelism
+    assert plan.count("Exchange ") == 1, plan
+    assert f"Exchange hashpartitioning({', '.join(cols)}, {n})" in plan, plan
+    sort_cols = cols + [c for c in ("metric", "bucket_ts") if c not in cols]
+    assert (
+        "Sort [" + ", ".join(f"{c} ASC NULLS FIRST" for c in sort_cols) + "], false"
+    ) in plan, plan
+
+
 def test_pivot_is_single_pass(spark):
     """Explicit pivot values => one parquet scan (no values-discovery
     job) and one aggregate pipeline."""

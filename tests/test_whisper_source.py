@@ -6,6 +6,7 @@ every written ring slot bit-for-bit and serve the reference's golden fetch
 from the imported warehouse.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from hoard_spark.sources.whisper import (
@@ -15,6 +16,7 @@ from hoard_spark.sources.whisper import (
     read_policies,
 )
 
+from test_layout import files_per_date_dir
 from whisper_fixture import LARGE_WHISPER, read_whisper
 
 
@@ -117,14 +119,17 @@ def test_export_roundtrips_through_reference_format(spark, engine, tmp_path):
     )
 
 
-def test_export_tree_roundtrip(spark, tmp_path):
+@pytest.mark.parametrize("metric_buckets", [None, 4])
+def test_export_tree_roundtrip(spark, tmp_path, metric_buckets):
     """Distributed bulk export: engine -> .wsp tree (executor-side pack)
-    -> re-import into a fresh engine reproduces every tier's values."""
+    -> re-import into a fresh engine reproduces every tier's values, and
+    the import leaves one data file per partition dir, as every write
+    through ``Layout.writer`` does."""
     from hoard_spark.engine import HoardEngine
     from hoard_spark.sources.whisper import export_tree
 
     now = 1_400_000_000
-    src = HoardEngine(spark, str(tmp_path / "src_wh"))
+    src = HoardEngine(spark, str(tmp_path / "src_wh"), metric_buckets)
     for m in ("exp.a", "exp.b", "exp.c"):
         src.create(m, [(60, 120), (3600, 48)], now=now)
         src.update_many(
@@ -139,8 +144,11 @@ def test_export_tree_roundtrip(spark, tmp_path):
         "exp.a.wsp", "exp.b.wsp", "exp.c.wsp",
     ]
 
-    dst = HoardEngine(spark, str(tmp_path / "dst_wh"))
+    dst = HoardEngine(spark, str(tmp_path / "dst_wh"), metric_buckets)
     import_tree(dst, str(out / "*.wsp"), now=now)
+    for root in (dst.points_path, dst.rollups_path):
+        counts = files_per_date_dir(root)
+        assert counts and set(counts.values()) == {1}, (root, counts)
     for m in ("exp.a", "exp.b", "exp.c"):
         ti_s, vals_s = src.fetch(m, now - 3600, now, now=now)
         ti_d, vals_d = dst.fetch(m, now - 3600, now, now=now)
